@@ -22,30 +22,14 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    # Input size drives the two knobs a human used to hand-set (SF1.md
-    # sf100 campaign). Driver memory must be fixed before the JVM
-    # starts, so size it here from the on-disk bytes: local mode folds
-    # a cluster's aggregate executor memory into one heap, and the
-    # 600M-row truncation-window shuffles at sf100 need ~5x the input
-    # bytes. Small sf keeps the old 16g.
-    disk_bytes = 0
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            try:
-                disk_bytes += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    auto_mem = f"{min(64, max(16, (disk_bytes * 5) >> 30))}g"
+    from tumult_analytics_spark.utils import _driver_memory
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("tumult_analytics_spark-bench")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem),
-        )
+        .config("spark.driver.memory", _driver_memory([sf_dir]))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")

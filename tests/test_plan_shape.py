@@ -594,6 +594,29 @@ def test_derive_shuffle_partitions_from_input_size(spark):
     ) == 7
 
 
+def test_driver_memory_fits_host(monkeypatch):
+    # The input-derived heap floors at 16g but never exceeds half of
+    # physical RAM; SPARK_GRAFT_DRIVER_MEM still overrides it.
+    import os
+
+    from tumult_analytics_spark.utils import _driver_memory
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    page = os.sysconf("SC_PAGE_SIZE")
+    monkeypatch.setattr(
+        os, "sysconf",
+        lambda name: (8 << 30) // page if name == "SC_PHYS_PAGES" else page,
+    )
+    assert _driver_memory([SF]) == "4g"
+    monkeypatch.setattr(
+        os, "sysconf",
+        lambda name: (256 << 30) // page if name == "SC_PHYS_PAGES" else page,
+    )
+    assert _driver_memory([SF]) == "16g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_memory([SF]) == "3g"
+
+
 def test_bm25_query_terms_are_broadcast(spark):
     # The query-term table must reach the tf frame via broadcast join —
     # a shuffled join on the term would move the whole corpus tf table
@@ -606,21 +629,37 @@ def test_bm25_query_terms_are_broadcast(spark):
     assert "rangepartitioning" not in plan.lower()  # no global sort
 
 
-def test_quality_train_gradient_agg_is_partial(spark):
-    # Each GD step is one map-side-combined aggregation: the plan of
-    # the per-step agg must carry partial_avg (combiner state), so the
-    # exchange moves 5 doubles per partition, not rows.
+def test_gd_trainer_step_is_one_partial_aggregation(spark, monkeypatch):
+    # Each step of the shared GD trainer, for both of its featurizers,
+    # is one map-side-combined aggregation over the cached training
+    # frame: partial_avg (combiner state) so the exchange moves
+    # K*(dim+2) doubles per partition, never rows; weights embed as
+    # literals, so there is no broadcast join and no row shuffle.
     from pyspark.sql import functions as F
 
-    from tumult_analytics_spark.operators.text import _quality_features
+    from tumult_analytics_spark.operators import text as X
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    feats = _quality_features(F.col("text"))
-    agg = docs.select(*[f.alias(f"f{i}") for i, f in enumerate(feats)]).agg(
-        F.avg("f0"), F.avg("f1"), F.avg("f2")
+    plans = []
+    real_step = X._gd_step
+
+    def spy(data, b, w):
+        step = real_step(data, b, w)
+        plans.append(_plan(step))
+        return step
+
+    monkeypatch.setattr(X, "_gd_step", spy)
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    X.quality_train_logreg(
+        docs.withColumn("label", (F.length("text") > 400).cast("double")),
+        "text", "label", steps=1,
     )
-    plan = _plan(agg)
-    assert "partial_avg" in plan
+    X.language_train_logreg(docs, "text", "lang", ["en", "zh"], dim=4, steps=1)
+    assert len(plans) == 2
+    for plan in plans:
+        assert "partial_avg" in plan
+        assert "InMemoryTableScan" in plan
+        assert "Exchange hashpartitioning" not in plan
+        assert "Broadcast" not in plan
 
 
 def test_warc_reader_ships_paths_not_bytes(spark, tmp_path):
@@ -704,25 +743,3 @@ def test_provenance_dedup_window_exchange_is_slim(spark):
     assert "html" not in exchanges[0] and "text" not in exchanges[0]
     # column pruning: html never leaves the scan at all
     assert "html" not in plan
-
-
-def test_language_train_step_agg_is_partial_and_broadcast(spark):
-    # A GD step = broadcast one-row weights + projection + ONE
-    # map-side-combined aggregation: partial_avg must appear, the
-    # weight join must be broadcast, and there is no row shuffle
-    # (the only exchange is the broadcast one).
-    from pyspark.sql import functions as F
-
-    from tumult_analytics_spark.operators import text as X
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    with_vec = X.hashed_char_ngrams(docs, "text", dim=4, output_column="__cv__")
-    xs = X._char_ngram_features(F.col("text"), 4, 3)
-    data = with_vec.select(*xs)
-    wrow = spark.createDataFrame([(0.0,)], "__b0__ double")
-    joined = data.crossJoin(F.broadcast(wrow))
-    agg = joined.agg(*[F.avg(f"__x{j}__") for j in range(4)])
-    plan = _plan(agg)
-    assert "partial_avg" in plan
-    assert "Broadcast" in plan
-    assert "Exchange hashpartitioning" not in plan

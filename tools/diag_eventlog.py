@@ -21,6 +21,64 @@ HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
 
+def _parse_stages(lines) -> dict:
+    """Per-stage metrics from event-log JSON lines: every
+    ``SparkListenerStageCompleted`` event becomes ``{stage id: {...}}``
+    with its wall time, task count, shuffle/spill bytes and executor
+    times. A stage without ``Number of Tasks`` counts 0 tasks; one
+    without ``Submission Time`` or ``Completion Time`` (e.g. a skipped
+    stage) has ``wall_s`` None rather than an epoch-scale difference.
+    Lines that are not JSON are ignored."""
+    stages = {}
+    for line in lines:
+        try:
+            ev = json.loads(line)
+        except ValueError:
+            continue
+        if ev.get("Event") != "SparkListenerStageCompleted":
+            continue
+        si = ev["Stage Info"]
+        t0, t1 = si.get("Submission Time"), si.get("Completion Time")
+        acc = {a["Name"]: a.get("Value", 0) for a in si.get("Accumulables", [])}
+
+        def num(name, unit):
+            try:
+                return int(acc.get(name, 0)) // unit
+            except (TypeError, ValueError):
+                return 0
+
+        m = "internal.metrics."
+        mb = 1 << 20
+        stages[si["Stage ID"]] = {
+            "wall_s": None
+            if t0 is None or t1 is None
+            else round((t1 - t0) / 1000.0, 2),
+            "tasks": si.get("Number of Tasks") or 0,
+            "name": si.get("Stage Name", "")[:80],
+            "details": si.get("Details", "").split("\n")[0][:120],
+            "sh_read_mb": num(m + "shuffle.read.remoteBytesRead", mb)
+            + num(m + "shuffle.read.localBytesRead", mb),
+            "sh_write_mb": num(m + "shuffle.write.bytesWritten", mb),
+            "spill_disk_mb": num(m + "diskBytesSpilled", mb),
+            "spill_mem_mb": num(m + "memoryBytesSpilled", mb),
+            "cpu_s": num(m + "executorCpuTime", 10**9),
+            "run_s": num(m + "executorRunTime", 10**3),
+            "gc_s": num(m + "jvmGCTime", 10**3),
+        }
+    return stages
+
+
+def _format_stage(sid: int, s: dict) -> str:
+    """One report line for a parsed stage (``-`` for an unknown wall)."""
+    wall = "-" if s["wall_s"] is None else f"{s['wall_s']:.2f}s"
+    return (
+        f"stage {sid:3d} wall {wall:>9} tasks {s['tasks']:4d} "
+        f"cpu {s['cpu_s']:5d}s run {s['run_s']:5d}s gc {s['gc_s']:4d}s "
+        f"shR {s['sh_read_mb']:6d}M shW {s['sh_write_mb']:6d}M "
+        f"spill {s['spill_disk_mb']:6d}M | {s['name']}"
+    )
+
+
 def main() -> None:
     key = os.environ["DIAG_KEY"]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -29,19 +87,14 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    disk_bytes = 0
-    for root, _d, files in os.walk(sf_dir):
-        for f in files:
-            disk_bytes += os.path.getsize(os.path.join(root, f))
-    auto_mem = f"{min(64, max(16, (disk_bytes * 5) >> 30))}g"
+    from tumult_analytics_spark.utils import _driver_memory
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("tas-diag")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", auto_mem))
+        .config("spark.driver.memory", _driver_memory([sf_dir]))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -64,65 +117,14 @@ def main() -> None:
     df.write.format("noop").mode("overwrite").save()
     spark.stop()
 
-    # Parse the event log: stage submit/complete + accumulated metrics.
-    stages = {}
-    for fn in os.listdir(evdir):
-        for line in open(os.path.join(evdir, fn)):
-            try:
-                ev = json.loads(line)
-            except Exception:
-                continue
-            if ev.get("Event") == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                t0 = si.get("Submission Time", 0)
-                t1 = si.get("Completion Time", 0)
-                acc = {
-                    a["Name"]: a.get("Value", 0)
-                    for a in si.get("Accumulables", [])
-                }
-
-                def num(name):
-                    v = acc.get(name, 0)
-                    try:
-                        return int(v)
-                    except Exception:
-                        return 0
-
-                stages[sid] = {
-                    "wall_s": round((t1 - t0) / 1000.0, 2),
-                    "tasks": si.get("Number of Tasks"),
-                    "name": si.get("Stage Name", "")[:80],
-                    "details": si.get("Details", "").split("\n")[0][:120],
-                    "sh_read_mb": num(
-                        "internal.metrics.shuffle.read.remoteBytesRead"
-                    ) // (1 << 20)
-                    + num(
-                        "internal.metrics.shuffle.read.localBytesRead"
-                    ) // (1 << 20),
-                    "sh_write_mb": num(
-                        "internal.metrics.shuffle.write.bytesWritten"
-                    ) // (1 << 20),
-                    "spill_disk_mb": num(
-                        "internal.metrics.diskBytesSpilled"
-                    ) // (1 << 20),
-                    "spill_mem_mb": num(
-                        "internal.metrics.memoryBytesSpilled"
-                    ) // (1 << 20),
-                    "cpu_s": num("internal.metrics.executorCpuTime")
-                    // 10**9,
-                    "run_s": num("internal.metrics.executorRunTime")
-                    // 10**3,
-                    "gc_s": num("internal.metrics.jvmGCTime") // 10**3,
-                }
-    for sid in sorted(stages, key=lambda s: -stages[s]["wall_s"]):
-        s = stages[sid]
-        print(
-            f"stage {sid:3d} wall {s['wall_s']:8.2f}s tasks {s['tasks']:4d} "
-            f"cpu {s['cpu_s']:5d}s run {s['run_s']:5d}s gc {s['gc_s']:4d}s "
-            f"shR {s['sh_read_mb']:6d}M shW {s['sh_write_mb']:6d}M "
-            f"spill {s['spill_disk_mb']:6d}M | {s['name']}"
-        )
+    lines = (
+        line
+        for fn in os.listdir(evdir)
+        for line in open(os.path.join(evdir, fn))
+    )
+    stages = _parse_stages(lines)
+    for sid in sorted(stages, key=lambda s: -(stages[s]["wall_s"] or 0)):
+        print(_format_stage(sid, stages[sid]))
     print("eventlog:", evdir)
 
 

@@ -29,7 +29,7 @@ from typing import Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -151,13 +151,3 @@ def noise_column(mechanism: NoiseMechanism, scale: float) -> Optional[Column]:
 
         return pandas_udf(_dgau, "long").asNondeterministic()(F.lit(0))
     raise ValueError(f"Unknown mechanism {mechanism}")
-
-
-def with_noise(
-    df: DataFrame, column: str, mechanism: NoiseMechanism, scale: float
-) -> DataFrame:
-    """Add noise to ``column`` in place (no-op when scale == 0)."""
-    noise = noise_column(mechanism, scale)
-    if noise is None:
-        return df
-    return df.withColumn(column, F.col(column) + noise)

@@ -1063,29 +1063,20 @@ def ivf_cosine_topk(
     quantizer with fixed cell centers — used for deterministic,
     SQL-checkable runs; recall depends on centroid quality only, the
     search mechanics are identical.
-    """
-    if nlist is None:
-        nlist = _auto_nlist(corpus.count())
-    cents = _ivf_centroids(
-        corpus, embedding_column, nlist, sample_size, seed, centroids
-    )
-    bc_C = corpus.sparkSession.sparkContext.broadcast(cents)
-    base = corpus.select(id_column, embedding_column)
-    corpus_cells = _ivf_assign(base, embedding_column, id_column, bc_C, 1)
-    query_probes = _ivf_assign(base, embedding_column, id_column, bc_C, nprobe)
 
-    id_field = corpus.schema[id_column]
-    fn = _block_topk_fn(id_column, k, deterministic)
-    cand = (
-        query_probes.groupBy("__cell__")
-        .cogroup(corpus_cells.groupBy("__cell__"))
-        .applyInPandas(fn, _topk_out_schema(id_field))
+    A one-shot search is an unmaterialized :func:`build_ivf_index`
+    followed by one :func:`query_ivf_index` with the corpus as the
+    query set.
+    """
+    index = build_ivf_index(
+        corpus, embedding_column, id_column, nlist=nlist,
+        sample_size=sample_size, seed=seed, centroids=centroids,
+        materialize=False,
     )
-    # No (query, neighbor) dedup shuffle: a corpus row lives in exactly
-    # ONE cell and a query's probed cells are distinct, so each pair is
-    # produced at most once — unlike the multi-table LSH paths, which
-    # must merge per-table candidates with a max-cosine groupBy.
-    return cand if not include_rank else _rank_topk(cand, k, rank_k)
+    return query_ivf_index(
+        index, corpus, k=k, nprobe=nprobe, deterministic=deterministic,
+        rank_k=rank_k, include_rank=include_rank,
+    )
 
 
 def _ivf_centroids(

@@ -640,19 +640,33 @@ def _char_ngram_kernel(dim: int, n: int, signed: bool):
     return _vec_fn
 
 
+def _char_vec(df, text_column, dim, n, vec_column=None, nt_column=None):
+    """``(frame, vec column, gram count)`` for the trained language-id
+    functions: featurize with :func:`hashed_char_ngrams` unless
+    ``vec_column`` names an already-computed (e.g. persisted) vector —
+    the train-then-serve compositions featurize once this way — and
+    count grams as ``nt_column`` or ``max(len(text) - (n - 1), 1)``."""
+    if vec_column is None:
+        df = hashed_char_ngrams(
+            df, text_column, dim=dim, n=n, output_column="__cv__"
+        )
+        vec_column = "__cv__"
+    if nt_column is not None:
+        nt = F.col(nt_column).cast("double")
+    else:
+        nt = F.greatest(
+            F.length(F.col(text_column)) - (n - 1), F.lit(1)
+        ).cast("double")
+    return df, vec_column, nt
+
+
 def _char_ngram_features(
-    text: Column, dim: int, n: int, vec_column: str = "__cv__"
+    vec_column: str, nt: Column, dim: int
 ) -> "list[Column]":
-    """Normalized char-ngram features x_j = signed-count_j / n_grams as
-    Catalyst expressions OVER an already-computed ``char_vec`` — shared
-    by training and trained inference so weights transfer exactly.
-    (Callers attach the vec via :func:`hashed_char_ngrams` first; this
-    helper only does the exact-rational normalization.)"""
-    nt = F.greatest(F.length(text) - (n - 1), F.lit(1)).cast("double")
-    return [
-        (F.col(vec_column)[j].cast("double") / nt).alias(f"__x{j}__")
-        for j in range(dim)
-    ]
+    """Normalized char-ngram features x_j = signed-count_j / n_grams —
+    exact rationals, shared by training and trained inference so
+    weights transfer exactly."""
+    return [F.col(vec_column)[j].cast("double") / nt for j in range(dim)]
 
 
 #: Rows per partition for iterative-GD training frames: ~300 B/row at
@@ -662,28 +676,110 @@ def _char_ngram_features(
 _STEP_PARTITION_ROWS = 131072
 
 
-def _shrink_training_frame(data: DataFrame, cnt: int) -> DataFrame:
-    """Repartition an already-persisted GD training frame to a
-    SIZE-DERIVED partition count (ceil(rows / _STEP_PARTITION_ROWS),
-    never more than it already has) and swap the persist to the
-    shrunk copy. Iterative trainers scan this frame once per step, so
-    a corpus of a few thousand rows spread over one partition per
-    core pays `steps * cores` empty-task launches for nothing —
-    measured 0.62 -> 0.46 s/step at dim=32/K=4 on 5000 rows. At scale
-    ceil(rows/131072) >= the scan's partition count and this is a
-    no-op, so the knob stays scale-adaptive rather than tuned to the
-    local core count. The one-time reshuffle reads the cache, not the
-    source. avg() then sums in a different partition order — last-ulp
-    drift the trainers' round-6 contract already absorbs (partition
-    counts already vary with core count and AQE)."""
+def _shrink_training_frame(data: DataFrame, want: int) -> DataFrame:
+    """Repartition a counted GD training frame to the SIZE-DERIVED
+    partition count ``want`` (never more than it has), persist the
+    shrunk copy and unpersist the input (a no-op when it was never
+    persisted). Iterative trainers scan this frame once per step, so a
+    few thousand rows over one partition per core pay `steps * cores`
+    empty-task launches for nothing — measured 0.62 -> 0.46 s/step at
+    dim=32/K=4 on 5000 rows. Callers derive ``want`` from the input
+    (rows or bytes over a per-partition target), so at scale this is a
+    no-op: the knob stays scale-adaptive, not tuned to the local core
+    count. Sums then reduce in a different partition order — last-ulp
+    drift the trainers' round-6 contract already absorbs."""
     nparts = data.rdd.getNumPartitions()
-    want = max(1, min(nparts, -(-cnt // _STEP_PARTITION_ROWS)))
+    want = max(1, min(nparts, want))
     if want >= nparts:
         return data
     small = data.repartition(want).persist()
     small.count()
     data.unpersist()
     return small
+
+
+def _gd_step(data: DataFrame, b: list, w: list) -> DataFrame:
+    """One :func:`_train_gd` step as a one-row frame whose ``__r__``
+    struct holds, per target ``c``, ``mse{c}``, ``gb{c}`` and
+    ``g{c}_{j}``: every target's gradient averages in ONE
+    map-side-combined aggregation. Cost disciplines (dim=32/K=4, sf0.1:
+    86 s -> ~0.5 s per 3 steps; per-row arithmetic and the aggregation
+    tree unchanged): z, then e/g, are staged as projected columns so
+    the K*(dim+2) aggregates are attribute products (inlining them
+    grows the compiled expression text ~70x); and the step is built as
+    SQL strings, not thousands of py4j Column calls. Weights embed as
+    `<repr>D` double literals — repr round-trips doubles exactly — so
+    re-codegen per step (~0.1 s) replaces a broadcast-weights join
+    (>0.4 s of exchange setup per step)."""
+    dim = len(w[0])
+    xs = [f"__x{j}__" for j in range(dim)]
+    z_sel = xs + [f"__y{c}__" for c in range(len(b))]
+    eg_sel = list(xs)
+    aggs = []
+    for c in range(len(b)):
+        terms = " ".join(f"+ {w[c][j]!r}D * __x{j}__" for j in range(dim))
+        z_sel.append(f"({b[c]!r}D {terms}) AS __z{c}__")
+        zc = f"__z{c}__"
+        e = f"(0.5D * (1.0D + {zc} / (1.0D + abs({zc}))) - __y{c}__)"
+        sp = f"(0.5D / ((1.0D + abs({zc})) * (1.0D + abs({zc}))))"
+        eg_sel.append(f"{e} AS __e{c}__")
+        eg_sel.append(f"(2.0D * {e} * {sp}) AS __g{c}__")
+        aggs.append(f"avg(__e{c}__ * __e{c}__) AS mse{c}")
+        aggs.append(f"avg(__g{c}__) AS gb{c}")
+        aggs.extend(f"avg(__g{c}__ * __x{j}__) AS g{c}_{j}" for j in range(dim))
+    return (
+        data.selectExpr(*z_sel)
+        .selectExpr(*eg_sel)
+        .agg(F.expr("struct(" + ", ".join(aggs) + ")").alias("__r__"))
+    )
+
+
+def _train_gd(data, b, w, steps, lr, name) -> "list[tuple]":
+    """The one SQL-string GD trainer behind :func:`quality_train_logreg`
+    and :func:`language_train_logreg`: full-batch gradient descent of
+    one rational-logistic model per target over a frame projected to
+    ``__y{c}__`` targets and ``__x{j}__`` features, from biases ``b``
+    and weight rows ``w``.
+
+    Distributed-GD shape (MLlib's gradient aggregation): weights live
+    on the driver; the frame is persisted, counted and shrunk once;
+    each step is ONE map-side-combined aggregation (:func:`_gd_step`),
+    a scan plus a K*(dim+2)-double exchange, then a driver-side update.
+
+    Engine-portability: ``s(z) = 0.5 * (1 + z / (1 + |z|))`` with MSE
+    loss, gradient ``2 * (s - y) * s'(z) * x``, ``s'(z) = 0.5 /
+    (1 + |z|)^2`` — pure +,*,/,abs arithmetic, no libm exp/log, so an
+    ANSI-SQL oracle replays the unrolled steps to equality after
+    round-to-6 (``avg()`` sums in partition order, so not bit-exact).
+
+    Returns ``(step, target, bias, weights, mse)`` rows: POST-update
+    weights, mse measured BEFORE the update.
+    """
+    if steps < 1:
+        raise ValueError("steps must be >= 1")
+    data = data.persist()
+    try:
+        cnt = data.count()
+        if cnt == 0:
+            raise ValueError(
+                f"{name}: empty training input — the gradient averages "
+                "would be null"
+            )
+        data = _shrink_training_frame(data, -(-cnt // _STEP_PARTITION_ROWS))
+        b, w = list(b), [list(row) for row in w]
+        hist = []
+        for step in range(1, int(steps) + 1):
+            agg = _gd_step(data, b, w).collect()[0]["__r__"]
+            for c in range(len(b)):
+                b[c] -= float(lr) * agg[f"gb{c}"]
+                for j in range(len(w[c])):
+                    w[c][j] -= float(lr) * agg[f"g{c}_{j}"]
+                hist.append(
+                    (step, c, b[c], list(w[c]), float(agg[f"mse{c}"]))
+                )
+    finally:
+        data.unpersist()
+    return hist
 
 
 def language_train_logreg(
@@ -704,119 +800,40 @@ def language_train_logreg(
     guessing with learning where :func:`language_id`'s stopword vote
     cannot separate same-script languages.
 
-    Same distributed-GD shape as :func:`quality_train_logreg` (its
-    docstring carries the full rationale): weights driver-side
-    (K x (dim+1) floats), each step ONE map-side-combined aggregation
-    computing every class's gradient averages in a single pass;
-    rational logistic ``0.5 * (1 + z / (1 + |z|))``, MSE loss, so the
-    whole trajectory is +,*,/,abs arithmetic and a SQL oracle replays
-    it to equality-after-round-6. Features are exact rationals:
-    signed gram count / gram count (both integers).
+    Trained by the shared GD trainer :func:`_train_gd` (its docstring
+    carries the full rationale) with K indicator targets: weights
+    driver-side (K x (dim+1) floats), each step ONE map-side-combined
+    aggregation computing every class's gradient averages in a single
+    pass. Features are exact rationals: signed gram count / gram count
+    (both integers); ``vec_column`` reuses an already-computed
+    :func:`hashed_char_ngrams` column.
 
     Returns one row per (step, class): POST-update ``bias, w0..w{dim-1}``
     and that class's pre-update ``mse``.
     """
-    if steps < 1:
-        raise ValueError("steps must be >= 1")
     if not classes:
         raise ValueError("classes must be non-empty")
-    # vec_column: reuse an ALREADY-computed (e.g. persisted)
-    # hashed_char_ngrams column instead of featurizing again — the
-    # train-then-serve composition featurizes once this way.
-    if vec_column is None:
-        with_vec = hashed_char_ngrams(
-            df, text_column, dim=dim, n=n, output_column="__cv__"
-        )
-        vec_column = "__cv__"
-    else:
-        with_vec = df
-    xs = _char_ngram_features(F.col(text_column), dim, n, vec_column)
+    with_vec, vec_column, nt = _char_vec(df, text_column, dim, n, vec_column)
     ys = [
         (F.col(label_column) == F.lit(c)).cast("double").alias(f"__y{i}__")
         for i, c in enumerate(classes)
     ]
-    data = with_vec.select(*ys, *xs).persist()
-    try:
-        cnt = data.count()
-        if cnt == 0:
-            raise ValueError(
-                "language_train_logreg: empty training input"
-            )
-        data = _shrink_training_frame(data, cnt)
-        K = len(classes)
-        b = [0.0] * K
-        w = [[0.0] * dim for _ in range(K)]
-        rows = []
-        # Per-step cost disciplines (measured at dim=32/K=4, sf0.1:
-        # 86 s -> ~7 s -> ~3 s -> ~0.5 s per 3 steps as each landed;
-        # oracle values unchanged since per-row arithmetic and the
-        # aggregation tree are identical):
-        # 1. e/g are projected ONCE per row per class and the
-        #    K*(dim+2) aggregates are simple attribute products —
-        #    inlining the (dim+1)-term z into every aggregate
-        #    multiplies the compiled expression text ~70x;
-        # 2. z is ITSELF staged as a projected column per class
-        #    before e/g reference it (e/g mention z six times, so
-        #    inlining z makes the analyzed tree ~6x bigger);
-        # 3. the whole step is built as SQL STRINGS (selectExpr /
-        #    expr), not Column-object arithmetic: building K*(dim+1)
-        #    Columns costs thousands of py4j round-trips (~2 s/step
-        #    at dim=32) where string building is pure Python and
-        #    parses in one call. Weights embed as `<repr>D` double
-        #    literals — repr round-trips doubles exactly and the D
-        #    suffix parses via Double.parseDouble, so the arithmetic
-        #    sees bit-identical constants; re-codegen per step is
-        #    ~0.1 s against the >0.4 s a broadcast-weights join
-        #    costs in exchange setup per step.
-        eg_sel = [f"__x{j}__" for j in range(dim)]
-        for ci in range(K):
-            zc = f"__z{ci}__"
-            e = (
-                f"(0.5D * (1.0D + {zc} / (1.0D + abs({zc})))"
-                f" - __y{ci}__)"
-            )
-            sp = f"(0.5D / ((1.0D + abs({zc})) * (1.0D + abs({zc}))))"
-            eg_sel.append(f"{e} AS __e{ci}__")
-            eg_sel.append(f"(2.0D * {e} * {sp}) AS __g{ci}__")
-        agg_strs = []
-        for ci in range(K):
-            agg_strs.append(f"avg(__e{ci}__ * __e{ci}__) AS mse{ci}")
-            agg_strs.append(f"avg(__g{ci}__) AS gb{ci}")
-            agg_strs.extend(
-                f"avg(__g{ci}__ * __x{j}__) AS g{ci}_{j}"
-                for j in range(dim)
-            )
-        struct_agg = "struct(" + ", ".join(agg_strs) + ")"
-        for step in range(1, int(steps) + 1):
-            z_sel = [f"__x{j}__" for j in range(dim)] + [
-                f"__y{ci}__" for ci in range(K)
-            ]
-            for ci in range(K):
-                terms = " ".join(
-                    f"+ {w[ci][j]!r}D * __x{j}__" for j in range(dim)
-                )
-                z_sel.append(f"({b[ci]!r}D {terms}) AS __z{ci}__")
-            agg = (
-                data.selectExpr(*z_sel)
-                .selectExpr(*eg_sel)
-                .agg(F.expr(struct_agg).alias("__r__"))
-                .collect()[0]["__r__"]
-            )
-            for ci, c in enumerate(classes):
-                b[ci] -= float(lr) * agg[f"gb{ci}"]
-                for j in range(dim):
-                    w[ci][j] -= float(lr) * agg[f"g{ci}_{j}"]
-                rows.append(
-                    (step, c, b[ci], *w[ci], float(agg[f"mse{ci}"]))
-                )
-    finally:
-        data.unpersist()
+    xs = _char_ngram_features(vec_column, nt, dim)
+    xs = [x.alias(f"__x{j}__") for j, x in enumerate(xs)]
+    K = len(classes)
+    hist = _train_gd(
+        with_vec.select(*ys, *xs), [0.0] * K, [[0.0] * dim] * K,
+        steps, lr, "language_train_logreg",
+    )
     schema = (
         "step int, class string, bias double, "
         + ", ".join(f"w{j} double" for j in range(dim))
         + ", mse double"
     )
-    return df.sparkSession.createDataFrame(rows, schema)
+    return df.sparkSession.createDataFrame(
+        [(step, classes[c], b, *w, mse) for step, c, b, w, mse in hist],
+        schema,
+    )
 
 
 def language_id_trained(
@@ -849,22 +866,14 @@ def language_id_trained(
     if not weights:
         raise ValueError("weights must be non-empty")
     drop_vec = vec_column is None
-    if vec_column is None:
-        with_vec = hashed_char_ngrams(
-            df, text_column, dim=dim, n=n, output_column="__cv__"
-        )
-        vec_column = "__cv__"
-    else:
-        with_vec = df
-    nt = F.greatest(F.length(F.col(text_column)) - (n - 1), F.lit(1)).cast(
-        "double"
-    )
+    with_vec, vec_column, nt = _char_vec(df, text_column, dim, n, vec_column)
+    xs = _char_ngram_features(vec_column, nt, dim)
     classes = list(weights)
     # Materialize each class score as a PROJECTED COLUMN before the
     # argmax fold: the fold's when-chains duplicate their inputs, so
     # folding over the raw (dim+1)-term score expressions multiplies
-    # compiled expression text ~2^K (the language_train_logreg codegen
-    # lesson); over attributes it stays linear.
+    # compiled expression text ~2^K (the `_gd_step` staging lesson);
+    # over attributes it stays linear.
     zcols = []
     for i, c in enumerate(classes):
         bias, ws = weights[c]
@@ -872,9 +881,7 @@ def language_id_trained(
             raise ValueError(f"weights[{c!r}] must have {dim} entries")
         z = F.lit(float(bias))
         for j in range(dim):
-            z = z + F.lit(float(ws[j])) * (
-                F.col(vec_column)[j].cast("double") / nt
-            )
+            z = z + F.lit(float(ws[j])) * xs[j]
         zcols.append(z.alias(f"__z{i}__"))
     scored = with_vec.select("*", *zcols)
     best_z, best_c = F.col("__z0__"), F.lit(classes[0])
@@ -914,10 +921,11 @@ def language_train_logreg_vec(
     :func:`language_train_logreg` math (hashed char-``n``-gram
     features, K one-vs-rest rational-logistic models, full-batch GD,
     MSE loss) executed as vectorized numpy kernels so ``dim`` can be
-    the 2^10..2^21 a deployed fastText-style model uses. The
-    column-expression trainer is the right shape at oracle-friendly
-    dims (every step replayable in SQL) but generates K*(dim+2)
-    aggregate expressions — compile-bound far below dim=1024.
+    the 2^10..2^21 a deployed fastText-style model uses. The shared
+    SQL-string trainer (:func:`_train_gd`) is the right shape at
+    oracle-friendly dims (every step replayable in SQL) but generates
+    K*(dim+2) aggregate expressions — compile-bound far below
+    dim=1024.
 
     Distributed-GD shape per step (the 100 TB contract): one
     ``mapInPandas`` pass emits ONE bounded partial-gradient row per
@@ -940,26 +948,16 @@ def language_train_logreg_vec(
         raise ValueError("steps must be >= 1")
     if not classes:
         raise ValueError("classes must be non-empty")
-    if vec_column is None:
-        with_vec = hashed_char_ngrams(
-            df, text_column, dim=dim, n=n, output_column="__cv__"
-        )
-        vec_column = "__cv__"
-    else:
-        with_vec = df
-    K = len(classes)
     # nt_column: reuse a precomputed gram count so callers can PRUNE
     # the text column before caching — at production dims the cached
     # vectors dominate memory and a dangling multi-KB text column per
     # row is pure waste (the sf100 OOM lesson). persist=False for the
     # same reason: when the caller already cached the pruned input,
     # a second cache of the same vectors here would double memory.
-    if nt_column is not None:
-        nt = F.col(nt_column).cast("double")
-    else:
-        nt = F.greatest(
-            F.length(F.col(text_column)) - (n - 1), F.lit(1)
-        ).cast("double")
+    with_vec, vec_column, nt = _char_vec(
+        df, text_column, dim, n, vec_column, nt_column
+    )
+    K = len(classes)
     yi = F.lit(-1)
     for i, c in enumerate(classes):
         yi = F.when(F.col(label_column) == F.lit(c), F.lit(i)).otherwise(yi)
@@ -970,31 +968,19 @@ def language_train_logreg_vec(
     )
     if persist:
         data = data.persist()
-    shrunk = None
     try:
         cnt = data.count()
         if cnt == 0:
             raise ValueError("language_train_logreg_vec: empty input")
-        # Shrink the step-loop frame to a SIZE-DERIVED partition count
-        # (float64 working set: dim * 8 bytes per row, ~64 MB per
-        # partition) — the `_shrink_training_frame` discipline at the
-        # vectorized shape. Each of the ``steps`` passes otherwise pays
-        # one near-empty task per input partition plus a partial-
-        # gradient row (1 + 2K + K*dim doubles) per Arrow batch into
-        # the posexplode reduce. At scale the byte-derived count meets
-        # or exceeds the input partitioning and this is a no-op, so the
-        # knob stays input-proportional, not tuned to the local core
-        # count. The one-time reshuffle reads the (caller's or local)
-        # cache once; sums then reduce in a different partition order —
-        # last-ulp drift the trainers' round-6 contract absorbs.
-        nparts = data.rdd.getNumPartitions()
-        want = max(1, min(nparts, -(-(cnt * dim * 8) // (64 << 20))))
-        if want < nparts:
-            shrunk = data.repartition(want).persist()
-            shrunk.count()
-            if persist:
-                data.unpersist()
-            data = shrunk
+        # Partition count derived from the float64 working set (dim * 8
+        # bytes per row, ~64 MB per partition) instead of a row count:
+        # each of the ``steps`` passes otherwise pays one near-empty
+        # task per input partition plus a partial-gradient row
+        # (1 + 2K + K*dim doubles) per Arrow batch into the posexplode
+        # reduce.
+        data = _shrink_training_frame(
+            data, -(-(cnt * dim * 8) // (64 << 20))
+        )
         b = np.zeros(K)
         W = np.zeros((K, dim))
         L = 1 + 2 * K + K * dim
@@ -1051,10 +1037,7 @@ def language_train_logreg_vec(
                      float(mse[ci]))
                 )
     finally:
-        if shrunk is not None:
-            shrunk.unpersist()
-        elif persist:
-            data.unpersist()
+        data.unpersist()
     return df.sparkSession.createDataFrame(
         rows,
         "step int, class string, bias double, w array<double>, "
@@ -1093,19 +1076,9 @@ def language_id_trained_vec(
     if Wm.shape != (len(classes), dim):
         raise ValueError(f"weights must be {len(classes)} x {dim}")
     drop_vec = vec_column is None
-    if vec_column is None:
-        with_vec = hashed_char_ngrams(
-            df, text_column, dim=dim, n=n, output_column="__cv__"
-        )
-        vec_column = "__cv__"
-    else:
-        with_vec = df
-    if nt_column is not None:
-        nt = F.col(nt_column).cast("double")
-    else:
-        nt = F.greatest(
-            F.length(F.col(text_column)) - (n - 1), F.lit(1)
-        ).cast("double")
+    with_vec, vec_column, nt = _char_vec(
+        df, text_column, dim, n, vec_column, nt_column
+    )
     margin = float(und_margin) if und_margin is not None else None
     names = np.array(classes, dtype=object)
 
@@ -1134,6 +1107,34 @@ def language_id_trained_vec(
     return scored.drop(vec_column) if drop_vec else scored
 
 
+def _quality_stats(text: Column):
+    """Token array, token count, mean token length and punctuation
+    ratio of ``text`` as Catalyst expressions — the base statistics of
+    :func:`quality_score` and of the capped :func:`_quality_features`."""
+    toks = _tokens(text)
+    n_chars = F.length(text)
+    n_tokens = F.size(toks)
+    mean_tok = F.when(
+        n_tokens > 0, n_chars.cast("double") / n_tokens.cast("double")
+    ).otherwise(F.lit(0.0))
+    punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", ""))
+    punct_ratio = F.when(
+        n_chars > 0, punct.cast("double") / n_chars.cast("double")
+    ).otherwise(F.lit(0.0))
+    return toks, n_tokens, mean_tok, punct_ratio
+
+
+def _quality_features(text: Column) -> "list[Column]":
+    """The three :func:`quality_logit` features as Catalyst expressions
+    — shared by inference (:func:`quality_logit`) and training
+    (:func:`quality_train_logreg`) so trained weights drop straight
+    into the serving path. Order matches :data:`QUALITY_LOGIT_WEIGHTS`."""
+    _, n_tokens, mean_tok, punct_ratio = _quality_stats(text)
+    f1 = F.least(n_tokens, F.lit(100)).cast("double") / F.lit(100.0)
+    f2 = F.least(mean_tok, F.lit(10.0)) / F.lit(10.0)
+    return [f1, f2, punct_ratio]
+
+
 def quality_score(
     df: DataFrame, text_column: str, output_column: str = "quality"
 ) -> DataFrame:
@@ -1145,17 +1146,9 @@ def quality_score(
     - quality: 0..1 composite (long enough, not punctuation soup, has
       stopwords — the classic C4/Gopher-style filters, cheaply)
     """
-    text = F.col(text_column)
-    toks = _tokens(text)
-    n_chars = F.length(text)
-    n_tokens = F.size(toks)
-    mean_tok = F.when(
-        n_tokens > 0, n_chars.cast("double") / n_tokens.cast("double")
-    ).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", ""))
-    punct_ratio = F.when(
-        n_chars > 0, punct.cast("double") / n_chars.cast("double")
-    ).otherwise(F.lit(0.0))
+    toks, n_tokens, mean_tok, punct_ratio = _quality_stats(
+        F.col(text_column)
+    )
     stop_hits = F.size(
         F.filter(
             F.transform(toks, lambda t: F.lower(t)),
@@ -1211,25 +1204,10 @@ def quality_logit(
     """
     w = dict(QUALITY_LOGIT_WEIGHTS)
     w.update(weights or {})
-    text = F.col(text_column)
-    toks = _tokens(text)
-    n_chars = F.length(text)
-    n_tokens = F.size(toks)
-    mean_tok = F.when(
-        n_tokens > 0, n_chars.cast("double") / n_tokens.cast("double")
-    ).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", ""))
-    punct_ratio = F.when(
-        n_chars > 0, punct.cast("double") / n_chars.cast("double")
-    ).otherwise(F.lit(0.0))
-    f1 = F.least(n_tokens, F.lit(100)).cast("double") / F.lit(100.0)
-    f2 = F.least(mean_tok, F.lit(10.0)) / F.lit(10.0)
-    logit = (
-        F.lit(float(bias))
-        + F.lit(float(w["tokens_capped"])) * f1
-        + F.lit(float(w["mean_tok_capped"])) * f2
-        + F.lit(float(w["punct_ratio"])) * punct_ratio
-    )
+    feats = _quality_features(F.col(text_column))
+    logit = F.lit(float(bias))
+    for name, f in zip(QUALITY_LOGIT_WEIGHTS, feats):
+        logit = logit + F.lit(float(w[name])) * f
     return df.withColumn(output_column, logit).withColumn(
         keep_column, logit > F.lit(0.0)
     )
@@ -1896,26 +1874,6 @@ def c4_line_filter(
     return out
 
 
-def _quality_features(text: Column):
-    """The three quality_logit features as Catalyst expressions —
-    shared by inference (:func:`quality_logit`) and training
-    (:func:`quality_train_logreg`) so trained weights drop straight
-    into the serving path."""
-    toks = _tokens(text)
-    n_chars = F.length(text)
-    n_tokens = F.size(toks)
-    mean_tok = F.when(
-        n_tokens > 0, n_chars.cast("double") / n_tokens.cast("double")
-    ).otherwise(F.lit(0.0))
-    punct = F.length(F.regexp_replace(text, r"[^!-/:-@\[-`{-~]", ""))
-    punct_ratio = F.when(
-        n_chars > 0, punct.cast("double") / n_chars.cast("double")
-    ).otherwise(F.lit(0.0))
-    f1 = F.least(n_tokens, F.lit(100)).cast("double") / F.lit(100.0)
-    f2 = F.least(mean_tok, F.lit(10.0)) / F.lit(10.0)
-    return [f1, f2, punct_ratio]
-
-
 def quality_train_logreg(
     df: DataFrame,
     text_column: str,
@@ -1930,87 +1888,27 @@ def quality_train_logreg(
     drop directly into the inference path
     (``quality_logit(df, col, weights={...}, bias=...)``).
 
-    Distributed-GD shape (the classic Spark pattern): weights live on
-    the driver (4 floats), each step is ONE map-side-combined
-    aggregation over the data — sum of per-row gradients — so the
-    per-step cost is a scan + 5-double exchange, never a weight
-    shuffle; the feature frame is computed once and cached for the k
-    scans. At 100 TB each step is exactly one pass, the same shape as
-    MLlib's gradient aggregation.
-
-    Engine-portability: the squashing function is the RATIONAL
-    logistic ``s(z) = 0.5 * (1 + z / (1 + |z|))`` (softsign-based
-    "fast sigmoid") and the loss is mean squared error, so the whole
-    trajectory is +,*,/,abs arithmetic — no exp/log whose libm last
-    ulps differ across engines — and an ANSI-SQL oracle replays the
-    unrolled steps to equality after round-to-6 (the distributed
-    ``avg()`` sums in partition-dependent order, so agreement is
-    up to the ulp drift that rounding absorbs, not bit-exact).
-    Gradient per row:
-    ``2 * (s - y) * s'(z) * x`` with ``s'(z) = 0.5 / (1 + |z|)^2``.
+    Trained by the shared GD trainer :func:`_train_gd` (its docstring
+    carries the distributed-GD and engine-portability rationale) with
+    one numeric target starting from ``init``: weights live on the
+    driver (4 floats), each step is ONE map-side-combined aggregation
+    over the cached feature frame — a scan + 5-double exchange.
 
     Returns one row per step: ``step`` (1-based), the POST-update
     weights ``bias, w_tokens, w_mean_tok, w_punct``, and ``mse``
     measured BEFORE the update (so step 1's mse is the init loss).
     """
-    if steps < 1:
-        raise ValueError("steps must be >= 1")
     feats = _quality_features(F.col(text_column))
-    y = F.col(label_column).cast("double")
-    cols = [f.alias(f"__f{i}__") for i, f in enumerate(feats)]
-    data = df.select(y.alias("__y__"), *cols)
-    data = data.persist()
-    try:
-        cnt = data.count()
-        if cnt == 0:
-            raise ValueError(
-                "quality_train_logreg: empty training input — the "
-                "gradient averages would be null"
-            )
-        data = _shrink_training_frame(data, cnt)
-        b, w = float(init[0]), [float(v) for v in init[1:4]]
-        rows = []
-        # The step is built as SQL strings with `<repr>D` double
-        # literals and staged z/e/g projections — the
-        # language_train_logreg per-step cost disciplines (see its
-        # comment); per-row arithmetic, aggregation and the driver
-        # update are unchanged, so the trajectory (and the SQL
-        # oracle's round-6 replay) is identical.
-        e_s = "(0.5D * (1.0D + __z__ / (1.0D + abs(__z__))) - __y__)"
-        sp_s = "(0.5D / ((1.0D + abs(__z__)) * (1.0D + abs(__z__))))"
-        eg_sel = [f"__f{i}__" for i in range(3)] + [
-            f"{e_s} AS __e__",
-            f"(2.0D * {e_s} * {sp_s}) AS __g__",
-        ]
-        struct_agg = (
-            "struct(avg(__e__ * __e__) AS mse, avg(__g__) AS gb, "
-            + ", ".join(
-                f"avg(__g__ * __f{i}__) AS g{i}" for i in range(3)
-            )
-            + ")"
-        )
-        for step in range(1, int(steps) + 1):
-            terms = " ".join(
-                f"+ {w[i]!r}D * __f{i}__" for i in range(3)
-            )
-            z_sel = [f"__f{i}__" for i in range(3)] + [
-                "__y__",
-                f"({b!r}D {terms}) AS __z__",
-            ]
-            agg = (
-                data.selectExpr(*z_sel)
-                .selectExpr(*eg_sel)
-                .agg(F.expr(struct_agg).alias("__r__"))
-                .collect()[0]["__r__"]
-            )
-            b -= float(lr) * agg["gb"]
-            for i in range(3):
-                w[i] -= float(lr) * agg[f"g{i}"]
-            rows.append((step, b, w[0], w[1], w[2], float(agg["mse"])))
-    finally:
-        data.unpersist()
+    data = df.select(
+        F.col(label_column).cast("double").alias("__y0__"),
+        *[f.alias(f"__x{j}__") for j, f in enumerate(feats)],
+    )
+    hist = _train_gd(
+        data, [float(init[0])], [[float(v) for v in init[1:4]]],
+        steps, lr, "quality_train_logreg",
+    )
     return df.sparkSession.createDataFrame(
-        rows,
+        [(step, b, *w, mse) for step, _, b, w, mse in hist],
         "step int, bias double, w_tokens double, w_mean_tok double, "
         "w_punct double, mse double",
     )

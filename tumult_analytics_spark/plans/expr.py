@@ -94,10 +94,6 @@ class QueryExpr:
         raise NotImplementedError
 
 
-def _child_schema(expr: "QueryExpr", catalog: Catalog) -> Schema:
-    return expr.schema(catalog)
-
-
 # --- Sources ---------------------------------------------------------------
 
 

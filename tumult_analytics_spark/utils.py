@@ -10,6 +10,7 @@ AQE all still apply — no performance cliff vs plain ``=``.
 from __future__ import annotations
 
 import contextlib as _contextlib
+import os
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame
@@ -364,6 +365,29 @@ def configure_shuffle_partitions(spark, paths: Sequence[str], **kwargs) -> int:
     n = derive_shuffle_partitions(spark, paths, **kwargs)
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n
+
+
+def _driver_memory(paths: Sequence[str]) -> str:
+    """``spark.driver.memory`` for a local-mode session over ``paths``,
+    fixed before the JVM starts. Local mode folds a cluster's executor
+    memory into one heap, and the widest shuffles (the sf100 truncation
+    windows) need ~5x the input bytes, so the heap is 5x the on-disk
+    size of ``paths`` within [16g, 64g] — clamped to half of physical
+    RAM so the JVM still fits the host next to its Python workers.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    disk_bytes = 0
+    for path in paths:
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                try:
+                    disk_bytes += os.path.getsize(os.path.join(root, f))
+                except OSError:
+                    pass
+    ram_g = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 30
+    want = min(64, max(16, (disk_bytes * 5) >> 30))
+    return f"{max(1, min(want, ram_g // 2))}g"
 
 
 @_contextlib.contextmanager
