@@ -233,9 +233,25 @@ def main() -> None:
                 separators=(",", ":"),
             ))
             chunk, chunk_chars = {}, 0
+    print(_queries_compact_line(timings))
     print(json.dumps(headline))
     _write_full_artifact(payload, only)
     spark.stop()
+
+
+def _queries_compact_line(timings: dict) -> str:
+    """Every key's seconds on one line, without key names: values in
+    ``sorted(queries())`` order, 3 decimals (~1.2 KB for 186 keys). Printed
+    just before the headline, it is the per-key line a 2,000-char stdout
+    tail always holds whole, where the chunk lines only fit in part."""
+    return json.dumps(
+        {
+            "metric": "queries_compact",
+            "order": "sorted(queries())",
+            "values": [round(v, 3) for _, v in sorted(timings.items())],
+        },
+        separators=(",", ":"),
+    )
 
 
 def _budget_deviations(

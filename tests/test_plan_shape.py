@@ -149,6 +149,71 @@ def test_small_keyset_still_broadcast(li_sess):
     assert _plan(out).count("BroadcastHashJoin") >= 2
 
 
+#: Plan nodes a driver-side release must not contain: a Python noise UDF,
+#: the above-cap Arrow noise pass, or a checkpoint scan.
+SPARK_NOISE_NODES = ("ArrowEvalPython", "MapInArrow", "ExistingRDD")
+
+
+@pytest.mark.parametrize("agg", ["count", "average", "variance"])
+def test_finite_release_is_a_local_relation(li_sess, agg):
+    # Under the row cap a finite-budget release is noised on the driver:
+    # its answer is plain data, with no Spark-side sampler or checkpoint.
+    g = QueryBuilder("lineitem").groupby(
+        KeySet.from_dict({"l_returnflag": ["A", "N", "R"]})
+    )
+    q = {
+        "count": g.count(),
+        "average": g.average("l_quantity", 0, 50),
+        "variance": g.variance("l_quantity", 0, 50),
+    }[agg]
+    plan = _plan(li_sess.evaluate(q, PureDPBudget(1)))
+    assert "LocalTableScan" in plan
+    assert not [n for n in SPARK_NOISE_NODES if n in plan], plan
+
+
+def test_dataframe_keyset_release_under_cap_is_local(li_sess, spark):
+    # A keyset of unknown size is probed; under the cap it takes the
+    # driver path too.
+    ks = KeySet.from_dataframe(
+        spark.read.parquet(f"{SF}/lineitem.parquet").select("l_returnflag")
+    )
+    assert ks.estimated_size() is None
+    out = li_sess.evaluate(
+        QueryBuilder("lineitem").groupby(ks).count(), PureDPBudget(1)
+    )
+    plan = _plan(out)
+    assert not [n for n in SPARK_NOISE_NODES if n in plan], plan
+    assert sorted(r["l_returnflag"] for r in out.collect()) == ["A", "N", "R"]
+
+
+def test_release_over_cap_is_one_arrow_pass(spark, monkeypatch):
+    # Above the row cap every noisy column is noised in ONE mapInArrow
+    # pass, pinned by a checkpoint so that later actions agree.
+    from tumult_analytics_spark.plans import compiler
+
+    monkeypatch.setattr(compiler, "KEYSET_BROADCAST_LIMIT", 4)
+    df = spark.createDataFrame(
+        pd.DataFrame({"g": [i % 50 for i in range(500)], "x": [i % 7 for i in range(500)]})
+    )
+    pinned = []
+    checkpoint = type(df).localCheckpoint
+
+    def spy(self, *a, **kw):
+        pinned.append(_plan(self))
+        return checkpoint(self, *a, **kw)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    s = Session.from_dataframe(INF, "t", df, AddOneRow())
+    ks = KeySet.from_dict({"g": list(range(50))})
+    out = s.evaluate(
+        QueryBuilder("t").groupby(ks).variance("x", 0, 10), PureDPBudget(1)
+    )
+    assert len(pinned) == 1 and pinned[0].count("MapInArrow") == 1, pinned
+    first = sorted(map(tuple, out.collect()))
+    assert len(first) == 50
+    assert first == sorted(map(tuple, out.collect()))
+
+
 def test_simhash_plan_is_arrow_batched_no_shuffle(li_sess, spark):
     # The md5 simhash is an Arrow-batched kernel (the Catalyst explode +
     # 60-accumulator aggregate measured ~6x slower, see simhash

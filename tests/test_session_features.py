@@ -308,6 +308,35 @@ def test_suppress_threshold_consistent_with_release(spark):
         assert all(r["count"] >= 8 for r in rows)
 
 
+def test_noise_info_runs_no_spark_job(spark):
+    # Introspection compiles lazily: no aggregation, release or probe job.
+    df = spark.createDataFrame(pd.DataFrame({"g": [1, 2, 2], "x": [1, 5, 9]}))
+    s = Session.from_dataframe(PureDPBudget(1), "t", df, AddOneRow())
+    q = QueryBuilder("t").groupby(KeySet.from_dict({"g": [1, 2]})).average(
+        "x", 0, 10
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("noise-info-probe", "noise-info-probe")
+    try:
+        info = s._noise_info(q, PureDPBudget(1))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(info) == 2
+    assert sc.statusTracker().getJobIdsForGroup("noise-info-probe") == []
+
+
+def test_release_over_empty_keyset(spark):
+    # An empty keyset releases zero rows with the infinite-budget schema.
+    df = spark.createDataFrame(pd.DataFrame({"g": [1, 2, 2], "x": [1, 5, 9]}))
+    s = Session.from_dataframe(PureDPBudget(float("inf")), "t", df, AddOneRow())
+    ks = KeySet.from_dataframe(df.select("g").filter("g > 100"))
+    q = QueryBuilder("t").groupby(ks).average("x", 0, 10)
+    exact = s.evaluate(q, PureDPBudget(float("inf")))
+    noisy = s.evaluate(q, PureDPBudget(1))
+    assert noisy.collect() == [] and exact.collect() == []
+    assert noisy.schema == exact.schema
+
+
 def test_get_groups_rejects_id_column(spark):
     from tumult_analytics_spark import AddRowsWithID, ApproxDPBudget, MaxRowsPerID
 

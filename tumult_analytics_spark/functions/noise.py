@@ -1,11 +1,19 @@
-"""DP noise mechanisms as columnar Spark operations.
+"""DP noise mechanisms: numpy samplers and one Arrow kernel that applies them.
 
 The reference delegates noise to tmlt.core; here the samplers are
-implemented directly as Arrow-batched pandas UDFs (vectorized numpy per
-batch), applied to the *aggregated* DataFrame — one noise draw per output
-group, so the noise stage costs O(#groups), never O(#rows). Each batch
-seeds an independent numpy Generator from OS entropy: partitions never
-share a seed (SURVEY.md §4.4 pitfall).
+implemented directly in numpy and applied to the *aggregated* result, one
+draw per released value, so noise costs O(#groups), never O(#rows).
+``add_noise`` is the single kernel: it replaces every noisy column of an
+Arrow table with column + draws. ``MeasurementResult.release``
+(plans/compiler.py) runs it on the driver for a result of at most
+``KEYSET_BROADCAST_LIMIT`` rows, collected once with ``toArrow()`` and
+handed back to Spark as a local relation: plain data that no later action
+can redraw. Above that cap, ``add_noise_batches`` runs the same kernel as
+one ``mapInArrow`` pass, which the release pins with ``localCheckpoint``;
+streaming DP counts use that pass too.
+
+Every generator is seeded from OS entropy by ``_rng()``: tasks never share
+a seed (SURVEY.md §4.4 pitfall).
 
 Mechanisms:
 - GEOMETRIC: two-sided (discrete Laplace), P(k) ∝ exp(-|k|/b); integer.
@@ -25,13 +33,12 @@ import math
 import secrets
 from dataclasses import dataclass
 from enum import Enum
-from typing import Iterator, List, Optional
+from typing import Iterator, Sequence
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 
 
 class NoiseMechanism(Enum):
@@ -86,10 +93,6 @@ def _sample_two_sided_geometric(rng, b: float, n: int) -> np.ndarray:
     return (g1 - g2).astype(np.int64)
 
 
-def _sample_discrete_laplace(rng, t: float, n: int) -> np.ndarray:
-    return _sample_two_sided_geometric(rng, t, n)
-
-
 def _sample_discrete_gaussian(rng, sigma_sq: float, n: int) -> np.ndarray:
     """CKS20 rejection sampler: propose discrete Laplace(t), accept with
     probability exp(-(|x| - sigma^2/t)^2 / (2 sigma^2))."""
@@ -98,7 +101,7 @@ def _sample_discrete_gaussian(rng, sigma_sq: float, n: int) -> np.ndarray:
     filled = 0
     while filled < n:
         m = max(64, 2 * (n - filled))
-        x = _sample_discrete_laplace(rng, t, m)
+        x = _sample_two_sided_geometric(rng, t, m)
         accept_p = np.exp(-((np.abs(x) - sigma_sq / t) ** 2) / (2.0 * sigma_sq))
         keep = rng.random(m) < accept_p
         kept = x[keep]
@@ -108,46 +111,56 @@ def _sample_discrete_gaussian(rng, sigma_sq: float, n: int) -> np.ndarray:
     return out
 
 
-def noise_column(mechanism: NoiseMechanism, scale: float) -> Optional[Column]:
-    """A Column of fresh noise (one draw per row), or None when scale == 0.
+@dataclass(frozen=True)
+class NoiseSpec:
+    """Noise for one column of a noiseless aggregate: ``mechanism`` at
+    ``scale`` (b for geometric/Laplace, sigma for the Gaussians)."""
 
-    The pandas UDF takes a dummy input series only to learn the batch
-    length; all heavy lifting is vectorized numpy inside Arrow batches.
-    """
-    if scale == 0:
-        return None
+    column: str
+    mechanism: NoiseMechanism
+    scale: float
+
+
+def draw(
+    mechanism: NoiseMechanism, scale: float, rng: np.random.Generator, n: int
+) -> np.ndarray:
+    """``n`` independent draws of ``mechanism`` at ``scale``."""
     if scale == float("inf"):
         raise ValueError("Cannot add infinite noise (zero budget on a finite query)")
-
-    # Every sampler is marked nondeterministic: Catalyst must neither
-    # collapse two references into one draw nor duplicate one reference
-    # into two independent draws (e.g. when a SuppressAggregates filter
-    # and the output projection both mention the noisy column, a
-    # "deterministic" UDF would be inlined twice and the threshold
-    # decision would use different noise than the released value).
     if mechanism is NoiseMechanism.GEOMETRIC:
-
-        def _geo(s: pd.Series) -> pd.Series:
-            return pd.Series(_sample_two_sided_geometric(_rng(), scale, len(s)))
-
-        return pandas_udf(_geo, "long").asNondeterministic()(F.lit(0))
+        return _sample_two_sided_geometric(rng, scale, n)
     if mechanism is NoiseMechanism.LAPLACE:
-
-        def _lap(s: pd.Series) -> pd.Series:
-            return pd.Series(_rng().laplace(0.0, scale, len(s)))
-
-        return pandas_udf(_lap, "double").asNondeterministic()(F.lit(0))
+        return rng.laplace(0.0, scale, n)
     if mechanism is NoiseMechanism.GAUSSIAN:
-
-        def _gau(s: pd.Series) -> pd.Series:
-            return pd.Series(_rng().normal(0.0, scale, len(s)))
-
-        return pandas_udf(_gau, "double").asNondeterministic()(F.lit(0))
+        return rng.normal(0.0, scale, n)
     if mechanism is NoiseMechanism.DISCRETE_GAUSSIAN:
-        sigma_sq = scale * scale
-
-        def _dgau(s: pd.Series) -> pd.Series:
-            return pd.Series(_sample_discrete_gaussian(_rng(), sigma_sq, len(s)))
-
-        return pandas_udf(_dgau, "long").asNondeterministic()(F.lit(0))
+        return _sample_discrete_gaussian(rng, scale * scale, n)
     raise ValueError(f"Unknown mechanism {mechanism}")
+
+
+def add_noise(
+    table: pa.Table, specs: Sequence[NoiseSpec], rng: np.random.Generator
+) -> pa.Table:
+    """``table`` with each spec's column replaced by column + one fresh
+    draw per row. Integer mechanisms keep integer columns integral."""
+    for s in specs:
+        i = table.schema.get_field_index(s.column)
+        noisy = pc.add(table.column(i), draw(s.mechanism, s.scale, rng, table.num_rows))
+        table = table.set_column(i, table.schema.field(i), noisy)
+    return table
+
+
+def add_noise_batches(df: DataFrame, specs: Sequence[NoiseSpec]) -> DataFrame:
+    """``add_noise`` as one Spark ``mapInArrow`` pass over ``df``, with one
+    generator per task. The pass is a plan node, not an expression, so
+    Catalyst never inlines it twice: a threshold filter and the released
+    value read the same draw. Each action over the result draws again, so
+    a batch caller pins it (``localCheckpoint``) before it is read twice."""
+    specs = list(specs)
+
+    def noisy(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rng = _rng()
+        for b in batches:
+            yield from add_noise(pa.Table.from_batches([b]), specs, rng).to_batches()
+
+    return df.mapInArrow(noisy, df.schema)

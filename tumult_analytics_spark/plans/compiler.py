@@ -10,14 +10,14 @@ Transformation/Measurement objects) with one Spark-first compile pass:
   _constraint_propagation.py);
 - aggregations compile to: [semi-join filter to keyset] -> groupBy().agg()
   (map-side partial aggregation) -> broadcast join with the keyset ->
-  noisy-zero fill -> noise column. The base-table scan is the only big
-  shuffle; the keyset side is always broadcast.
+  zero fill; ``MeasurementResult.release`` then adds the noise. The
+  base-table scan is the only big shuffle; the keyset side is broadcast.
 
 Scale notes (100 TB): the semi-join against the keyset is a broadcast
 hash join that prunes rows *before* the aggregation shuffle; the
 aggregation itself benefits from partial (map-side) aggregation; the final
 keyset join touches only #groups rows. Python UDFs appear solely in
-user-supplied map/flat_map and in the noise stage (O(#groups) rows).
+user-supplied map/flat_map and in per-group stages (O(#groups) rows).
 """
 
 from __future__ import annotations
@@ -45,8 +45,15 @@ from ..constraints import (
     truncate_max_rows_per_group_per_id,
     truncate_max_rows_per_id,
 )
-from ..functions.noise import NoiseInfo, NoiseMechanism, noise_column
-from ..keyset import KeySet
+from ..functions.noise import (
+    NoiseInfo,
+    NoiseMechanism,
+    NoiseSpec,
+    _rng,
+    add_noise,
+    add_noise_batches,
+)
+from ..keyset import KeySet, _FromTuples
 from ..protected import (
     AddMaxRows,
     AddMaxRowsInMaxGroups,
@@ -1332,14 +1339,52 @@ def _groupby(df: DataFrame, cols: Sequence[str]):
 
 @dataclass
 class MeasurementResult:
+    """A compiled measurement, lazy and free of noise: the noiseless
+    aggregate ``df``, the ``noise`` its columns need, and ``finish``, the
+    post-noise steps (algebra, casts, thresholds) up to the answer."""
+
     df: DataFrame
-    noise_infos: List[NoiseInfo]
+    noise: List[NoiseSpec]
+    finish: Callable[[DataFrame], DataFrame] = lambda df: df
+    #: Upper bound on ``df``'s rows when known without running Spark.
+    max_rows: Optional[int] = None
+    #: ``finish`` itself samples inside Spark (grouped quantiles).
+    spark_random: bool = False
+    #: Introspection records when they are not one per ``noise`` entry.
+    infos: Optional[List[NoiseInfo]] = None
+
+    @property
+    def noise_infos(self) -> List[NoiseInfo]:
+        if self.infos is not None:
+            return self.infos
+        return [NoiseInfo(n.mechanism, n.scale) for n in self.noise]
+
+    def release(self) -> DataFrame:
+        """The answer, with noise drawn exactly once per released value:
+        on the driver up to ``KEYSET_BROADCAST_LIMIT`` rows (the size at
+        which keysets already ship from the driver), else in one Spark
+        pass pinned by ``localCheckpoint`` (see ``Session.evaluate``)."""
+        specs = [n for n in self.noise if n.scale > 0]
+        if not specs:
+            out = self.finish(self.df)
+            return out.localCheckpoint(eager=True) if self.spark_random else out
+        cap = KEYSET_BROADCAST_LIMIT
+        known_small = self.max_rows is not None and self.max_rows <= cap
+        table = (self.df if known_small else self.df.limit(cap + 1)).toArrow()
+        if table.num_rows > cap:
+            noisy = add_noise_batches(self.df, specs)
+            return self.finish(noisy).localCheckpoint(eager=True)
+        local = self.df.sparkSession.createDataFrame(
+            add_noise(table, specs, _rng()), schema=self.df.schema
+        )
+        return self.finish(local)
 
 
 def compile_measurement(
     expr: E.QueryExpr, ctx: CompileContext, budget: PrivacyBudget
 ) -> MeasurementResult:
-    """Compile an aggregation root into a noisy result DataFrame."""
+    """Compile an aggregation root into a noiseless, lazy
+    :class:`MeasurementResult`; ``release`` draws its noise."""
     bspec = BudgetSpec.of(budget)
     ctx.budget_is_infinite = bspec.infinite
 
@@ -1354,9 +1399,11 @@ def compile_measurement(
 
     if isinstance(expr, E.SuppressAggregates):
         inner = compile_measurement(expr.child, ctx, budget)
-        return MeasurementResult(
-            inner.df.filter(F.col(expr.column) >= expr.threshold),
-            inner.noise_infos,
+        return dc_replace(
+            inner,
+            finish=lambda df: inner.finish(df).filter(
+                F.col(expr.column) >= expr.threshold
+            ),
         )
 
     if isinstance(expr, E.GetGroups):
@@ -1369,16 +1416,15 @@ def compile_measurement(
     if isinstance(keys, E.AutoPartitionKeys):
         return _compile_auto_partition(expr, ctx, bspec)
 
-    if isinstance(expr, E.GroupByCount):
+    if isinstance(expr, (E.GroupByCount, E.GroupByCountDistinct)):
         return _compile_count(expr, ctx, bspec)
-    if isinstance(expr, E.GroupByCountDistinct):
-        return _compile_count_distinct(expr, ctx, bspec)
     if isinstance(expr, E.GroupByBoundedSum):
         return _compile_sum(expr, ctx, bspec)
-    if isinstance(expr, E.GroupByBoundedAverage):
-        return _compile_average(expr, ctx, bspec)
-    if isinstance(expr, (E.GroupByBoundedVariance, E.GroupByBoundedStdev)):
-        return _compile_variance(expr, ctx, bspec)
+    if isinstance(
+        expr,
+        (E.GroupByBoundedAverage, E.GroupByBoundedVariance, E.GroupByBoundedStdev),
+    ):
+        return _compile_moments(expr, ctx, bspec)
     if isinstance(expr, E.GroupByQuantile):
         return _compile_quantile(expr, ctx, bspec)
     if isinstance(expr, E.GroupByQuantiles):
@@ -1398,44 +1444,27 @@ def _prep(expr, ctx: CompileContext, bspec: BudgetSpec):
     return t, df, gcols, keys, l1, l2
 
 
-def _compile_count(
-    expr: E.GroupByCount, ctx: CompileContext, bspec: BudgetSpec
-) -> MeasurementResult:
+def _compile_count(expr, ctx: CompileContext, bspec: BudgetSpec) -> MeasurementResult:
     t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
     out = expr.output_column
+    if isinstance(expr, E.GroupByCountDistinct):
+        # Exact distinct, then noise (NOT approx_count_distinct): dedup
+        # over the counted columns + group columns, then a plain count.
+        distinct_cols = (
+            list(dict.fromkeys([*gcols, *expr.columns_to_count]))
+            if expr.columns_to_count
+            else list(df.columns)
+        )
+        df = df.dropDuplicates(distinct_cols)
     agg = _groupby(df, gcols).agg(F.count(F.lit(1)).alias(out))
     res = _keyset_attach(agg, keys, {out: 0})
     mech = resolve_mechanism(expr.mechanism, bspec, integer_valued=True)
-    scale = noise_scale(mech, bspec, l1, l2)
-    noise = noise_column(mech, scale)
-    if noise is not None:
-        res = res.withColumn(out, F.col(out) + noise)
-    res = res.withColumn(out, F.col(out).cast("long"))
-    return MeasurementResult(res, [NoiseInfo(mech, scale)])
-
-
-def _compile_count_distinct(
-    expr: E.GroupByCountDistinct, ctx: CompileContext, bspec: BudgetSpec
-) -> MeasurementResult:
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    out = expr.output_column
-    # Exact distinct, then noise (NOT approx_count_distinct): dedup over
-    # the counted columns + group columns, then a plain count.
-    distinct_cols = (
-        list(dict.fromkeys([*gcols, *expr.columns_to_count]))
-        if expr.columns_to_count
-        else list(df.columns)
+    return MeasurementResult(
+        res,
+        [NoiseSpec(out, mech, noise_scale(mech, bspec, l1, l2))],
+        lambda df: df.withColumn(out, F.col(out).cast("long")),
+        keys.estimated_size(),
     )
-    deduped = df.dropDuplicates(distinct_cols)
-    agg = _groupby(deduped, gcols).agg(F.count(F.lit(1)).alias(out))
-    res = _keyset_attach(agg, keys, {out: 0})
-    mech = resolve_mechanism(expr.mechanism, bspec, integer_valued=True)
-    scale = noise_scale(mech, bspec, l1, l2)
-    noise = noise_column(mech, scale)
-    if noise is not None:
-        res = res.withColumn(out, F.col(out) + noise)
-    res = res.withColumn(out, F.col(out).cast("long"))
-    return MeasurementResult(res, [NoiseInfo(mech, scale)])
 
 
 def _compile_sum(
@@ -1443,8 +1472,7 @@ def _compile_sum(
 ) -> MeasurementResult:
     t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
     out = expr.output_column
-    cs = t.schema
-    ctype = cs[expr.measure_column].column_type
+    ctype = t.schema[expr.measure_column].column_type
     integer_valued = (
         ctype is ColumnType.INTEGER
         and float(expr.low).is_integer()
@@ -1457,120 +1485,58 @@ def _compile_sum(
     res = res.withColumn(out, F.coalesce(F.col(out), F.lit(zero)))
     sens = max(abs(float(expr.low)), abs(float(expr.high)))
     mech = resolve_mechanism(expr.mechanism, bspec, integer_valued)
-    scale = noise_scale(mech, bspec, l1 * sens, l2 * sens)
-    noise = noise_column(mech, scale)
-    if noise is not None:
-        res = res.withColumn(out, F.col(out) + noise)
-    res = res.withColumn(
-        out, F.col(out).cast("long" if integer_valued else "double")
-    )
-    return MeasurementResult(res, [NoiseInfo(mech, scale)])
-
-
-def _compile_average(
-    expr: E.GroupByBoundedAverage, ctx: CompileContext, bspec: BudgetSpec
-) -> MeasurementResult:
-    """avg = midpoint + noisy_sum(x - midpoint) / max(noisy_count, 1);
-    budget split evenly between the two noisy quantities."""
-    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
-    out = expr.output_column
-    cs = t.schema
-    ctype = cs[expr.measure_column].column_type
-    lo, hi = float(expr.low), float(expr.high)
-    mid = lo + (hi - lo) / 2.0
-    clamped = _clamp(F.col(expr.measure_column), ctype, expr.low, expr.high)
-    dev = clamped.cast("double") - F.lit(mid)
-    agg = _groupby(df, gcols).agg(
-        F.sum(dev).alias("__sdev__"), F.count(F.lit(1)).alias("__n__")
-    )
-    res = _keyset_attach(agg, keys, {"__sdev__": 0.0, "__n__": 0})
-    res = res.withColumns(
-        {
-            "__sdev__": F.coalesce(F.col("__sdev__"), F.lit(0.0)),
-            "__n__": F.coalesce(F.col("__n__"), F.lit(0)),
-        }
-    )
-    half = bspec.split(2)
-    sum_sens = (hi - lo) / 2.0
-    sum_mech = resolve_mechanism(expr.mechanism, half, integer_valued=False)
-    count_mech = resolve_mechanism(expr.mechanism, half, integer_valued=True)
-    sum_scale = noise_scale(sum_mech, half, l1 * sum_sens, l2 * sum_sens)
-    count_scale = noise_scale(count_mech, half, l1, l2)
-    for col, mech, scale in [
-        ("__sdev__", sum_mech, sum_scale),
-        ("__n__", count_mech, count_scale),
-    ]:
-        noise = noise_column(mech, scale)
-        if noise is not None:
-            res = res.withColumn(col, F.col(col) + noise)
-    res = res.withColumn(
-        out,
-        F.lit(mid)
-        + F.col("__sdev__") / F.greatest(F.col("__n__").cast("double"), F.lit(1.0)),
-    ).drop("__sdev__", "__n__")
     return MeasurementResult(
         res,
-        [NoiseInfo(sum_mech, sum_scale), NoiseInfo(count_mech, count_scale)],
+        [NoiseSpec(out, mech, noise_scale(mech, bspec, l1 * sens, l2 * sens))],
+        lambda df: df.withColumn(
+            out, F.col(out).cast("long" if integer_valued else "double")
+        ),
+        keys.estimated_size(),
     )
 
 
-def _compile_variance(
-    expr, ctx: CompileContext, bspec: BudgetSpec
-) -> MeasurementResult:
-    """Sample variance from noisy (sum dev, sum dev^2, count); budget split
-    three ways. Stdev = sqrt(max(variance, 0))."""
-    is_stdev = isinstance(expr, E.GroupByBoundedStdev)
+def _compile_moments(expr, ctx: CompileContext, bspec: BudgetSpec) -> MeasurementResult:
+    """Average and variance/stdev from noisy sums of dev = x - midpoint.
+    avg = midpoint + noisy_sum(dev) / max(noisy_count, 1), budget split in
+    two; sample variance from noisy (sum dev, sum dev^2, count), budget
+    split three ways; stdev = sqrt(max(variance, 0))."""
+    is_avg = isinstance(expr, E.GroupByBoundedAverage)
     t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
     out = expr.output_column
-    cs = t.schema
-    ctype = cs[expr.measure_column].column_type
+    ctype = t.schema[expr.measure_column].column_type
     lo, hi = float(expr.low), float(expr.high)
     mid = lo + (hi - lo) / 2.0
+    half_range = (hi - lo) / 2.0
     clamped = _clamp(F.col(expr.measure_column), ctype, expr.low, expr.high)
     dev = clamped.cast("double") - F.lit(mid)
-    agg = _groupby(df, gcols).agg(
-        F.sum(dev).alias("__sd__"),
-        F.sum(dev * dev).alias("__sdd__"),
-        F.count(F.lit(1)).alias("__n__"),
-    )
-    res = _keyset_attach(agg, keys, {"__sd__": 0.0, "__sdd__": 0.0, "__n__": 0})
-    res = res.withColumns(
-        {
-            "__sd__": F.coalesce(F.col("__sd__"), F.lit(0.0)),
-            "__sdd__": F.coalesce(F.col("__sdd__"), F.lit(0.0)),
-            "__n__": F.coalesce(F.col("__n__"), F.lit(0)),
-        }
-    )
-    third = bspec.split(3)
-    half_range = (hi - lo) / 2.0
-    sd_sens = half_range
-    sdd_sens = half_range * half_range
-    mech_f = resolve_mechanism(expr.mechanism, third, integer_valued=False)
-    mech_i = resolve_mechanism(expr.mechanism, third, integer_valued=True)
-    sd_scale = noise_scale(mech_f, third, l1 * sd_sens, l2 * sd_sens)
-    sdd_scale = noise_scale(mech_f, third, l1 * sdd_sens, l2 * sdd_sens)
-    n_scale = noise_scale(mech_i, third, l1, l2)
-    for col, mech, scale in [
-        ("__sd__", mech_f, sd_scale),
-        ("__sdd__", mech_f, sdd_scale),
-        ("__n__", mech_i, n_scale),
-    ]:
-        noise = noise_column(mech, scale)
-        if noise is not None:
-            res = res.withColumn(col, F.col(col) + noise)
-    n = F.greatest(F.col("__n__").cast("double"), F.lit(1.0))
-    nm1 = F.greatest(F.col("__n__").cast("double") - F.lit(1.0), F.lit(1.0))
-    var = (F.col("__sdd__") - (F.col("__sd__") * F.col("__sd__")) / n) / nm1
-    var = F.greatest(var, F.lit(0.0))
-    res = res.withColumn(out, F.sqrt(var) if is_stdev else var).drop(
-        "__sd__", "__sdd__", "__n__"
-    )
-    infos = [
-        NoiseInfo(mech_f, sd_scale),
-        NoiseInfo(mech_f, sdd_scale),
-        NoiseInfo(mech_i, n_scale),
-    ]
-    return MeasurementResult(res, infos)
+    # column -> (aggregate, zero, sensitivity per changed row)
+    sums = {"__sd__": (F.sum(dev), 0.0, half_range)}
+    if not is_avg:
+        sums["__sdd__"] = (F.sum(dev * dev), 0.0, half_range * half_range)
+    sums["__n__"] = (F.count(F.lit(1)), 0, 1)
+    agg = _groupby(df, gcols).agg(*[a.alias(c) for c, (a, _, _) in sums.items()])
+    zeros = {c: z for c, (_, z, _) in sums.items()}
+    res = _keyset_attach(agg, keys, zeros)
+    res = res.withColumns({c: F.coalesce(F.col(c), F.lit(z)) for c, z in zeros.items()})
+    part = bspec.split(len(sums))
+    noise = []
+    for c, (_, _, d) in sums.items():
+        mech = resolve_mechanism(expr.mechanism, part, integer_valued=c == "__n__")
+        noise.append(NoiseSpec(c, mech, noise_scale(mech, part, l1 * d, l2 * d)))
+
+    def finish(df: DataFrame) -> DataFrame:
+        n = F.greatest(F.col("__n__").cast("double"), F.lit(1.0))
+        if is_avg:
+            value = F.lit(mid) + F.col("__sd__") / n
+        else:
+            nm1 = F.greatest(F.col("__n__").cast("double") - F.lit(1.0), F.lit(1.0))
+            var = (F.col("__sdd__") - (F.col("__sd__") * F.col("__sd__")) / n) / nm1
+            value = F.greatest(var, F.lit(0.0))
+            if isinstance(expr, E.GroupByBoundedStdev):
+                value = F.sqrt(value)
+        return df.withColumn(out, value).drop(*sums)
+
+    return MeasurementResult(res, noise, finish, keys.estimated_size())
 
 
 #: Number of histogram bins the DP quantile uses per group.
@@ -1682,29 +1648,43 @@ def _compile_quantiles(
                 # sensitivity sens * max(q, 1-q) (see analysis above).
                 du_per_row = max(q, 1.0 - q)
                 scores = (eps / (2.0 * max(sens * du_per_row, 1e-12))) * util
-                g = np.random.default_rng().gumbel(size=nb)
+                g = _rng().gumbel(size=nb)
                 idx = int(np.argmax(scores + g))
             row[out] = float(lo + (idx + 0.5) * width)
         return pd.DataFrame([row], columns=[c for c, _ in out_fields] + outs)
 
-    if gcols:
-        per_group = counts.groupBy(*gcols).applyInPandas(em_quantiles, out_schema)
-        res = _keyset_attach(per_group, keys, {})
+    def finish(counts: DataFrame) -> DataFrame:
+        res = _per_group(counts, gcols, em_quantiles, out_schema, keys)
         # Missing groups: empty data -> all bins tie -> argmax picks bin 0.
-        for q, out in zip(qs, outs):
+        for q, out in zip(qs, outs) if gcols else ():
             res = res.withColumn(
                 out,
                 F.coalesce(F.col(out), F.lit(_empty_quantile_value(q, lo, hi, nb))),
             )
-    else:
-        pdf = counts.toPandas()
-        res_pdf = em_quantiles((), pdf)
-        res = df.sparkSession.createDataFrame(res_pdf, out_schema)
+        return res
+
     infos = [
         NoiseInfo(NoiseMechanism.EXPONENTIAL, 0.0 if bspec.infinite else eps)
         for _ in qs
     ]
-    return MeasurementResult(res, infos)
+    return MeasurementResult(
+        counts,
+        [],
+        finish,
+        spark_random=bool(gcols) and not bspec.infinite,
+        infos=infos,
+    )
+
+
+def _per_group(counts, gcols, kernel, out_schema, keys: KeySet) -> DataFrame:
+    """``kernel(key, pdf)`` -> one answer row per group of ``counts``: one
+    ``applyInPandas`` attached to the keyset, or, with no group columns, a
+    driver-side call whose answer is plain data."""
+    if not gcols:
+        pdf = kernel((), counts.toPandas())
+        return counts.sparkSession.createDataFrame(pdf, out_schema)
+    per_group = counts.groupBy(*gcols).applyInPandas(kernel, out_schema)
+    return _keyset_attach(per_group, keys, {})
 
 
 def _empty_quantile_value(q: float, lo: float, hi: float, nb: int) -> float:
@@ -1742,23 +1722,24 @@ def _compile_get_groups(
     )
     counts = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__c__"))
     if bspec.infinite:
-        res = counts.filter(F.col("__c__") >= 1).drop("__c__")
-        return MeasurementResult(res, [NoiseInfo(NoiseMechanism.GEOMETRIC, 0.0)])
-    eps, delta = bspec.epsilon, bspec.delta
-    if delta <= 0:
-        raise ValueError("get_groups requires delta > 0")
-    b = l1 / eps
-    # Threshold calibrated to the row-stability l1 (not just l1 = 1): one
-    # protected change can add up to l1 rows, all landing in one brand-new
-    # group (true count l1, release prob (1/2)exp(-(tau-l1)/b)) or spread
-    # over up to l1 new groups (union bound adds a factor l1). Solving
-    # (l1/2)exp(-(tau-l1)/b) <= delta gives tau = l1 + b*ln(l1/(2*delta)).
-    tau = max(1.0, l1 + b * math.log(l1 / (2.0 * delta)))
-    noisy = counts.withColumn(
-        "__c__", F.col("__c__") + noise_column(NoiseMechanism.GEOMETRIC, b)
+        b, tau = 0.0, 1
+    else:
+        eps, delta = bspec.epsilon, bspec.delta
+        if delta <= 0:
+            raise ValueError("get_groups requires delta > 0")
+        b = l1 / eps
+        # Threshold calibrated to the row-stability l1 (not just l1 = 1):
+        # one protected change can add up to l1 rows, all landing in one
+        # brand-new group (true count l1, release prob
+        # (1/2)exp(-(tau-l1)/b)) or spread over up to l1 new groups (union
+        # bound adds a factor l1). Solving (l1/2)exp(-(tau-l1)/b) <= delta
+        # gives tau = l1 + b*ln(l1/(2*delta)).
+        tau = max(1.0, l1 + b * math.log(l1 / (2.0 * delta)))
+    return MeasurementResult(
+        counts,
+        [NoiseSpec("__c__", NoiseMechanism.GEOMETRIC, b)],
+        lambda df: df.filter(F.col("__c__") >= tau).drop("__c__"),
     )
-    res = noisy.filter(F.col("__c__") >= tau).drop("__c__")
-    return MeasurementResult(res, [NoiseInfo(NoiseMechanism.GEOMETRIC, b)])
 
 
 def _compile_get_bounds(
@@ -1782,10 +1763,6 @@ def _compile_get_bounds(
     counts = _groupby(binned, [*gcols, "__b__"]).agg(F.count(F.lit(1)).alias("__c__"))
     eps = bspec.epsilon if bspec.kind != "zcdp" else math.sqrt(8.0 * bspec.rho)
     scale = 0.0 if bspec.infinite else (2.0 * l1 / eps if eps > 0 else 0.0)
-    if scale > 0:
-        counts = counts.withColumn(
-            "__c__", F.col("__c__") + noise_column(NoiseMechanism.GEOMETRIC, scale)
-        )
     lb, ub = expr.lower_bound_column, expr.upper_bound_column
 
     out_fields = [(c, t.df.schema[c].dataType) for c in gcols]
@@ -1815,13 +1792,11 @@ def _compile_get_bounds(
         row[ub] = val
         return pd.DataFrame([row], columns=[c for c, _ in out_fields] + [lb, ub])
 
-    if gcols:
-        per_group = counts.groupBy(*gcols).applyInPandas(pick_bound, out_schema)
-        res = _keyset_attach(per_group, keys, {})
-    else:
-        pdf = counts.toPandas()
-        res = df.sparkSession.createDataFrame(pick_bound((), pdf), out_schema)
-    return MeasurementResult(res, [NoiseInfo(NoiseMechanism.GEOMETRIC, scale)])
+    return MeasurementResult(
+        counts,
+        [NoiseSpec("__c__", NoiseMechanism.GEOMETRIC, scale)],
+        lambda counts: _per_group(counts, gcols, pick_bound, out_schema, keys),
+    )
 
 
 def _compile_auto_partition(expr, ctx: CompileContext, bspec: BudgetSpec):
@@ -1845,16 +1820,12 @@ def _compile_auto_partition(expr, ctx: CompileContext, bspec: BudgetSpec):
     groups = compile_measurement(
         E.GetGroups(expr.child, tuple(detect_cols)), ctx, sel_budget
     )
-    detected_df = groups.df
-    if not bspec.infinite and not ctx.introspection_only:
-        # The detected keys come from a NOISY partition selection: the
-        # aggregation plan reads them twice (semi-filter + attach), and a
-        # lazy/persisted plan could recompute and redraw different keys.
-        # Eager localCheckpoint pins one draw and severs the lineage;
-        # the blocks are released by Spark's ContextCleaner when the
-        # DataFrame is garbage-collected (no persist leak).
-        detected_df = detected_df.localCheckpoint(eager=True)
-    keyset = KeySet.from_dataframe(detected_df)
+    if bspec.infinite or ctx.introspection_only:
+        keyset = KeySet.from_dataframe(groups.finish(groups.df))
+    else:
+        # The detected keys come from a noisy partition selection, so they
+        # are released (drawn once) before the aggregation reads them.
+        keyset = _released_keyset(groups.release())
     if plan is not None:
         # KeySetPlan: fixed factors crossed with the detected keys, then
         # any deferred algebra (filter/project/join/...) in plan order.
@@ -1863,4 +1834,17 @@ def _compile_auto_partition(expr, ctx: CompileContext, bspec: BudgetSpec):
         keyset = fixed * keyset
     concrete = dc_replace(expr, groupby_keys=keyset)
     inner = compile_measurement(concrete, ctx, agg_budget)
-    return MeasurementResult(inner.df, groups.noise_infos + inner.noise_infos)
+    return dc_replace(inner, infos=groups.noise_infos + inner.noise_infos)
+
+
+def _released_keyset(df: DataFrame) -> KeySet:
+    """Released keys as a KeySet: driver-side rows of known size when there
+    are at most ``KEYSET_BROADCAST_LIMIT`` (collecting a local relation
+    runs no Spark job), so the aggregation broadcasts them."""
+    keyset = KeySet.from_dataframe(df)  # validates the key column types
+    rows = df.limit(KEYSET_BROADCAST_LIMIT + 1).collect()
+    if len(rows) > KEYSET_BROADCAST_LIMIT:
+        return keyset
+    return KeySet(
+        _FromTuples(keyset.columns(), keyset.column_types(), tuple(map(tuple, rows)))
+    )

@@ -4,8 +4,11 @@ Fresh implementation of the behavior documented at
 ``/root/reference/src/tmlt/analytics/session.py``: private/public table
 registry, privacy-budget ledger (sequential composition), evaluate /
 create_view / delete_view / partition_and_create, schema introspection, and
-noise introspection. All execution is lazy PySpark; ``evaluate`` returns a
-DataFrame whose plan ends in the noise stage.
+noise introspection. Compilation is lazy PySpark and noise-free;
+``evaluate`` releases the result: a finite-budget answer of at most
+``KEYSET_BROADCAST_LIMIT`` rows gets its noise on the driver and comes back
+as a local relation, a larger one gets it in one Spark Arrow pass pinned by
+``localCheckpoint``, and an infinite-budget answer stays a lazy plan.
 """
 
 from __future__ import annotations
@@ -378,15 +381,17 @@ class Session:
     def evaluate(self, query: Query, privacy_budget: PrivacyBudget) -> DataFrame:
         """Execute a measurement query, deduct budget, return noisy result.
 
-        Finite-budget results are MATERIALIZED before being returned
+        Finite-budget noise is drawn exactly once per released value
         (mirroring the reference, where tmlt.core's SparkMeasurement
-        writes noisy outputs to temp tables): the noise stage is a
-        nondeterministic sampler, so a lazy plan would redraw fresh noise
-        on every Spark action over the returned DataFrame — collecting N
-        times would average the noise away and break the DP guarantee.
-        ``localCheckpoint(eager=True)`` runs the plan exactly once and
-        severs the lineage, so a later recomputation is impossible (a
-        lost block fails the job rather than silently resampling).
+        writes noisy outputs to temp tables): a lazy sampler would redraw
+        on every Spark action, and collecting N times would average the
+        noise away. The noiseless aggregate is collected once as Arrow
+        when it has at most ``KEYSET_BROADCAST_LIMIT`` rows; one numpy
+        kernel adds every column's noise on the driver, and the answer
+        is built over that local relation, where the noise is plain data.
+        Above the cap the same kernel runs as one ``mapInArrow`` pass and
+        ``localCheckpoint(eager=True)`` pins its single draw (a lost
+        block fails the job rather than silently resampling).
         Infinite-budget results are deterministic and stay fully lazy.
         """
         self._activate()
@@ -397,9 +402,7 @@ class Session:
         expr = rewrite(expr, ctx.catalog)
         result = compile_measurement(expr, ctx, privacy_budget)
         self._spend(self._actual_spend(expr, privacy_budget))
-        if privacy_budget.is_infinite():
-            return result.df
-        return result.df.localCheckpoint(eager=True)
+        return result.release()
 
     @staticmethod
     def _actual_spend(expr, privacy_budget: PrivacyBudget) -> PrivacyBudget:

@@ -97,15 +97,12 @@ def dp_windowed_counts(
 
     Noise is added per output row in the aggregated (small) stream, so
     the DP stage costs O(#windows), not O(#events)."""
-    from ..functions.noise import NoiseMechanism, noise_column
+    from ..functions.noise import NoiseMechanism, NoiseSpec, add_noise_batches
 
     counts = windowed_event_counts(df, window=window, watermark=watermark)
     scale = max_rows_per_user_per_window / epsilon
-    noise = noise_column(NoiseMechanism.GEOMETRIC, scale)
-    out = counts.withColumn(
-        "n", (F.col("n") + (noise if noise is not None else F.lit(0))).cast("long")
-    )
-    return out.drop("sum_value")
+    noise = [NoiseSpec("n", NoiseMechanism.GEOMETRIC, scale)]
+    return add_noise_batches(counts, noise).drop("sum_value")
 
 
 def enrich_with_dimension(
