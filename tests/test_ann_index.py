@@ -154,6 +154,19 @@ class TestMinhashIndex:
         with pytest.raises(ValueError, match="expected a minhash index"):
             D.extend_minhash_index(idx, docs)
 
+    def test_other_signer_rejected(self, spark):
+        # md5 is the only signer; an index whose params name another one
+        # (saved by an older build) cannot sign batches compatibly.
+        from tumult_analytics_spark.operators import dedup as D
+
+        idx = D.build_minhash_index(self._docs(spark), "text", "doc_id")
+        assert idx.params["signature_fn"] == "md5"
+        rolling = S.AnnIndex(
+            "minhash", idx.df, dict(idx.params, signature_fn="rolling")
+        )
+        with pytest.raises(ValueError, match="'rolling'"):
+            D.banded_batch(rolling, self._docs(spark))
+
 
 class TestIvfIndex:
     def test_matches_one_shot_path(self, spark):
@@ -288,8 +301,7 @@ class TestMinhashIndexPersistence:
             "doc_id long, text string",
         )
         idx = build_minhash_index(
-            docs, "text", "doc_id", num_hashes=16, bands=4,
-            signature_fn="md5",
+            docs, "text", "doc_id", num_hashes=16, bands=4
         )
         batch = spark.createDataFrame(
             [(100 + i, f"shared shingle stream number {i} padded text")
@@ -944,6 +956,24 @@ class TestBruteDeterministicKernelTopk:
         ).count()
         assert n == 40 * 3
 
+    @pytest.mark.parametrize("deterministic", [False, True])
+    def test_outside_query_keeps_k_at_least_corpus(self, spark, deterministic):
+        # A query that is not in the corpus has no self-match to
+        # exclude: with k >= |corpus| it gets every corpus row.
+        df = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        )
+        q = spark.createDataFrame(
+            [(9, [1.0, 0.5])], "vec_id long, embedding array<double>"
+        )
+        got = S.brute_force_cosine_topk(
+            df, "embedding", "vec_id", k=5, queries=q,
+            deterministic=deterministic,
+        ).collect()
+        assert sorted(r["neighbor_id"] for r in got) == [0, 1, 2]
+        assert sorted(r["rank"] for r in got) == [1, 2, 3]
+
     def test_rounded_tie_broken_by_id(self, spark):
         # construct embeddings where two corpus rows are EXACTLY equal
         # (cosine ties even after rounding): the smaller id must win.
@@ -1005,3 +1035,51 @@ class TestIvfAssignSelection:
             by_id.setdefault(r["vec_id"], []).append(r["__cell__"])
         for i in range(500):
             assert sorted(by_id[i]) == sorted(ref[i]), (i, by_id[i], ref[i])
+
+
+class TestSmallerIdDups:
+    """The shared near-duplicate drop rule against a plain double loop:
+    an id is returned iff some strictly smaller id scores >= t."""
+
+    @staticmethod
+    def _reference(Q, qids, C, cids, t, round_scores):
+        out = []
+        for j in range(len(qids)):
+            for i in range(len(cids)):
+                score = float(np.dot(Q[j], C[i]))
+                if round_scores:
+                    score = round(score, 6)
+                if cids[i] < qids[j] and score >= t:
+                    out.append(qids[j])
+                    break
+        return sorted(out)
+
+    def _corpus(self):
+        rnd = np.random.RandomState(11)
+        V = rnd.normal(size=(50, 4))
+        V[10:15] = V[0:5]  # exact duplicates
+        V[20] = 0.0  # zero vector
+        ids = rnd.permutation(1000)[:50].astype(np.int64)  # unsorted
+        return S._unit_rows(V), ids
+
+    @pytest.mark.parametrize(
+        "t,round_scores",
+        # t=1.0 only rounded: the duplicates then score exactly 1.0, so
+        # the case pins ">=" (raw scores may land an ulp either side).
+        [(t, r) for t in (0.3, 0.8, 0.99) for r in (False, True)]
+        + [(1.0, True)],
+    )
+    def test_matches_double_loop(self, monkeypatch, t, round_scores):
+        monkeypatch.setattr(S, "_BRUTE_SLICE", 7)  # several slices
+        M, ids = self._corpus()
+        got = sorted(S._smaller_id_dups(M, ids, t, round_scores))
+        assert got == self._reference(M, ids, M, ids, t, round_scores)
+
+    @pytest.mark.parametrize("round_scores", [False, True])
+    def test_separate_corpus_matches_double_loop(self, monkeypatch,
+                                                 round_scores):
+        monkeypatch.setattr(S, "_BRUTE_SLICE", 7)
+        M, ids = self._corpus()
+        Q, qids = M[::3], ids[::3]
+        got = sorted(S._smaller_id_dups(Q, qids, 0.5, round_scores, M, ids))
+        assert got == self._reference(Q, qids, M, ids, 0.5, round_scores)

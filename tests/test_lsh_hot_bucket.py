@@ -75,7 +75,7 @@ class TestCollapseIdentical:
         assert top == m  # the cluster really is signature-identical
         kept = D.minhash_lsh_dedup(
             df, "text", "doc_id", num_hashes=32, bands=8,
-            min_signature_similarity=0.7, signature_fn="md5",
+            min_signature_similarity=0.7,
         )
         ids = sorted(r["doc_id"] for r in kept.collect())
         assert 0 in ids and not any(1 <= k < m for k in ids)

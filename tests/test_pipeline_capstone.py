@@ -42,7 +42,7 @@ def test_full_pipeline_composes(spark, docs, tmp_path):
     # 3. Near-dup dedup (MinHash LSH, md5 kernel).
     near = D.minhash_lsh_dedup(
         exact, "text", "doc_id", num_hashes=32, bands=8,
-        min_signature_similarity=0.7, signature_fn="md5",
+        min_signature_similarity=0.7,
     )
     n3 = near.count()
     assert n3 <= n2

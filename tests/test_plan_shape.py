@@ -228,6 +228,23 @@ def test_simhash_plan_is_arrow_batched_no_shuffle(li_sess, spark):
     assert "HashAggregate" not in plan  # fingerprint needs no shuffle
 
 
+@pytest.mark.parametrize("use_lsh", [True, False])
+def test_cosine_dedup_drops_ids_without_aggregate(spark, use_lsh):
+    # Both paths emit drop ids straight into the left-anti join: no
+    # pair dedup and no distinct over the drop set (an id dropped in
+    # several LSH tables is harmless on the anti-join's right side).
+    from tumult_analytics_spark.operators.dedup import embedding_cosine_dedup
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    kept = embedding_cosine_dedup(
+        emb, "embedding", "vec_id", threshold=0.97, use_lsh=use_lsh,
+        plane_kind="rademacher", round_scores=True,
+    )
+    plan = kept._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan, plan
+    assert "LeftAnti" in plan, plan
+
+
 def test_minhash_signature_plan_is_arrow_batched_and_pruned(spark):
     # The md5 signature kernel is deliberately an Arrow-batched pandas
     # UDF, not codegen: the Catalyst form (explode + md5 + conv + N

@@ -16,7 +16,6 @@ from .dedup import (
     extend_minhash_index,
     minhash_lsh_candidates,
     minhash_lsh_dedup,
-    minhash_signatures,
     minhash_signatures_md5,
     ngram_jaccard_pairs,
     query_minhash_index,

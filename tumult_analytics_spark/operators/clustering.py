@@ -225,8 +225,9 @@ def semantic_dedup(
     measured 26x for 10x data at sf10). The kernel refuses clusters above
     ``max_cluster_rows`` with a message naming the fix (raise k), the
     same guard contract as ``similarity.BRUTE_FORCE_MAX_ROWS``; within a
-    cluster the similarity matrix is computed in ``_SLICE``-row blocks
-    so peak temp memory is bounded at _SLICE x cluster_rows doubles.
+    cluster the drop rule is ``similarity._smaller_id_dups``, whose
+    similarity matrix is computed in ``_BRUTE_SLICE``-row blocks so peak
+    temp memory is bounded at _BRUTE_SLICE x cluster_rows doubles.
 
     ``method="lsh"`` bounds the pairwise pass even when k is pinned
     small (e.g. the oracle-replayable k=4 of the graded query): rows
@@ -263,6 +264,8 @@ def semantic_dedup(
         )
     import pandas as pd  # noqa: F811 — local for the serialized kernel
 
+    from .similarity import _smaller_id_dups, _unit_rows
+
     cap = int(max_cluster_rows)
 
     def dropped_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -272,26 +275,12 @@ def semantic_dedup(
                 f"(> max_cluster_rows={cap}); raise k so clusters are "
                 "small enough for the pairwise pass"
             )
-        if len(pdf) < 2:
-            return pd.DataFrame({"__drop_id__": pd.Series([], dtype="int64")})
-        order = pdf[id_col].to_numpy().argsort(kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
-        M = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].to_numpy()]
-        )[order]
-        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        drop = np.zeros(len(ids), dtype=bool)
-        # Rows sorted by id: j is dropped iff any i < j has S[i, j] >= t.
         # Dropped rows still count as "smaller-id neighbors" (EXISTS
         # semantics, not greedy-survivor semantics).
-        for s in range(0, len(ids), _SLICE):
-            blk = M[s : s + _SLICE] @ M.T
-            hit = blk >= threshold
-            for r in range(hit.shape[0]):
-                j = s + r
-                if hit[r, :j].any():
-                    drop[j] = True
-        return pd.DataFrame({"__drop_id__": ids[drop]})
+        ids = _smaller_id_dups(
+            _unit_rows(pdf[vec_col]), pdf[id_col].to_numpy(), threshold, False
+        )
+        return pd.DataFrame({"__drop_id__": ids})
 
     dropped = (
         assigned.select(cluster_col, id_col, vec_col)
@@ -320,7 +309,7 @@ def _semantic_dedup_lsh(
     bucket every assigned row (one Arrow pass, sign bits from the RAW
     vector like the similarity module), melt tables, join the cluster
     id back, and evaluate the EXISTS-smaller-id predicate per
-    (cluster, table, bucket) group with the sliced matmul kernel."""
+    (cluster, table, bucket) group with ``similarity._smaller_id_dups``."""
     import pandas as pd
 
     from .similarity import (
@@ -328,6 +317,7 @@ def _semantic_dedup_lsh(
         _melt_tables,
         _normalize_and_bucket,
         _planes_for,
+        _smaller_id_dups,
     )
 
     if bits is None:
@@ -357,22 +347,13 @@ def _semantic_dedup_lsh(
                 f"{len(pdf)} rows (> max_cluster_rows={cap}); raise "
                 "bits so buckets are small enough for the pairwise pass"
             )
-        if len(pdf) < 2:
-            return pd.DataFrame({"__drop_id__": pd.Series([], dtype="int64")})
-        order = pdf[id_col].to_numpy().argsort(kind="stable")
-        ids = pdf[id_col].to_numpy()[order]
-        M = np.stack(pdf["__nv__"].to_numpy())[order]
-        drop = np.zeros(len(ids), dtype=bool)
-        for s in range(0, len(ids), _SLICE):
-            blk = M[s : s + _SLICE] @ M.T
-            if round_scores:
-                blk = np.round(blk, 6)
-            hit = blk >= threshold
-            for r in range(hit.shape[0]):
-                j = s + r
-                if hit[r, :j].any():
-                    drop[j] = True
-        return pd.DataFrame({"__drop_id__": ids[drop]})
+        ids = _smaller_id_dups(
+            np.stack(pdf["__nv__"].to_numpy()),
+            pdf[id_col].to_numpy(),
+            threshold,
+            round_scores,
+        )
+        return pd.DataFrame({"__drop_id__": ids})
 
     dropped = (
         keyed.groupBy(cluster_col, "__t__", "__bkt__")

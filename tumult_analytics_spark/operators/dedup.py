@@ -3,18 +3,23 @@
 Five families, each scale-designed:
 
 - exact:        hash groupBy (one shuffle, map-side combine)
-- MinHash+LSH:  shingle -> minhash signature -> band buckets -> bucket join;
-                all signature math is Catalyst higher-order functions
-                (JVM-side, no Python), candidates verified by signature
-                similarity. The classic Broder/LSH construction.
+- MinHash+LSH:  shingle -> minhash signature -> band buckets -> bucket join,
+                candidates verified by signature similarity. The classic
+                Broder/LSH construction. One signer,
+                :func:`minhash_signatures_md5`: an Arrow-batched kernel
+                (hashlib md5 shingle hashes, numpy universal hashes) whose
+                integer arithmetic a SQL oracle replays exactly. Banding,
+                the bucket join and the agreement check are Catalyst.
 - SimHash:      64-bit sign-of-weighted-sum fingerprint via a vectorized
                 pandas UDF (numpy bit tricks), near-dups = small Hamming
                 distance within prefix buckets.
 - n-gram Jaccard: explode n-grams -> self-join on gram -> |A∩B| / |A∪B|.
                 Exact but O(candidate pairs); the LSH path above is the
                 100 TB route, this is the verifier.
-- embedding cosine: delegated to similarity.brute_force_cosine_topk /
-                lsh_cosine_topk with a threshold.
+- embedding cosine: drop a row iff a smaller-id row has cosine >= the
+                threshold, evaluated by ``similarity._smaller_id_dups``
+                within sign-LSH buckets (or exactly against the broadcast
+                corpus) and applied with one left-anti join.
 """
 
 from __future__ import annotations
@@ -37,107 +42,6 @@ def dedup_exact(df: DataFrame, columns: Optional[Sequence[str]] = None) -> DataF
     partial aggregation; survives any scale Spark itself survives.
     """
     return df.dropDuplicates(list(columns) if columns else None)
-
-
-def _shingle_hashes(text_col: Column, k: int) -> Column:
-    """Array of xxhash64 values of the k-char shingles of ``text_col``.
-
-    Pure Catalyst: sequence + transform + substring + xxhash64 — runs
-    JVM-side inside whole-stage codegen, no Python involved.
-    """
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(text_col) - (k - 1), F.lit(1))),
-        lambda i: F.xxhash64(F.substring(text_col, i, k)),
-    )
-
-
-def minhash_signatures_catalyst(
-    df: DataFrame,
-    text_column: str,
-    id_column: str,
-    num_hashes: int = 64,
-    shingle_size: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, signature array<long>) via pure Catalyst higher-order functions.
-
-    Kept as the zero-Python reference path, but HOF lambdas are interpreted
-    (outside whole-stage codegen): measured ~1.4 ms/doc at ~300 chars/doc —
-    ~9x slower than the vectorized kernel in ``minhash_signatures``.
-    """
-    import random
-
-    rnd = random.Random(seed)
-    coeffs = [
-        (rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
-        for _ in range(num_hashes)
-    ]
-    base = _shingle_hashes(F.col(text_column), shingle_size)
-    with_base = df.select(id_column, base.alias("__sh__"))
-
-    # NB: single-arg lambdas only — pyspark counts default-arg params as
-    # lambda arity, so closures must come from a factory function.
-    def _universal(a: int, b: int):
-        return lambda h: (
-            (F.lit(a) * F.pmod(h, F.lit(_MERSENNE)) + F.lit(b))
-            % F.lit(_MERSENNE)
-        )
-
-    sig = F.array(
-        *[
-            F.array_min(F.transform("__sh__", _universal(a, b)))
-            for a, b in coeffs
-        ]
-    )
-    return with_base.select(id_column, sig.alias("signature"))
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_column: str,
-    id_column: str,
-    num_hashes: int = 64,
-    shingle_size: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """(id, signature array<long>) — MinHash signature per document.
-
-    Vectorized Arrow-batched kernel: per document, a strided
-    sliding-window polynomial rolling hash over the UTF-8 bytes produces
-    all shingle hashes in one numpy op, then the (shingles x num_hashes)
-    universal-hash matrix is reduced with a single min. Measured ~0.15
-    ms/doc vs ~1.4 ms/doc for the interpreted Catalyst HOF equivalent
-    (``minhash_signatures_catalyst``) — the batched Python boundary wins
-    here because HOF lambdas never enter whole-stage codegen.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    k = shingle_size
-    P = _MERSENNE
-    B = 257
-
-    def _sig_fn(texts):
-        rnd = np.random.RandomState(seed)
-        A = rnd.randint(1, P, size=num_hashes).astype(np.int64)
-        Bc = rnd.randint(0, P, size=num_hashes).astype(np.int64)
-        pows = np.array([pow(B, k - 1 - j, P) for j in range(k)], dtype=np.int64)
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-            if len(b) < k:
-                b = np.pad(b, (0, k - len(b)))
-            win = np.lib.stride_tricks.sliding_window_view(b, k)
-            H = (win * pows[None, :] % P).sum(axis=1) % P
-            out.append(((A[None, :] * H[:, None] + Bc[None, :]) % P).min(axis=0))
-        return pd.Series(out)
-
-    _sig = pandas_udf(_sig_fn, "array<long>").asNondeterministic()
-    return df.select(id_column, _sig(F.col(text_column)).alias("signature"))
 
 
 def minhash_coefficients(num_hashes: int, seed: int = 42):
@@ -393,8 +297,6 @@ def minhash_lsh_dedup(
     shingle_size: int = 5,
     bands: int = 16,
     min_signature_similarity: float = 0.5,
-    cache_signatures: bool = True,
-    signature_fn: str = "rolling",
     collapse_identical: bool = True,
     hot_bucket_cap: Optional[int] = 4096,
 ) -> DataFrame:
@@ -403,10 +305,8 @@ def minhash_lsh_dedup(
     smaller-id row is its near-duplicate — no iterative connected
     components, which keeps this a bounded number of shuffles).
 
-    ``signature_fn``: "rolling" = vectorized numpy rolling-hash kernel
-    (fastest); "md5" = pure-Catalyst md5 shingle hashing whose arithmetic
-    is exactly reproducible in ANSI SQL (the value-oracle path). Same
-    LSH structure either way.
+    Signatures come from :func:`minhash_signatures_md5`, whose
+    arithmetic a SQL oracle replays exactly.
 
     Hot-cluster guards (the 100 TB pathology: a crawl's boilerplate
     cluster of m identical pages shares every band hash, so each band's
@@ -435,21 +335,17 @@ def minhash_lsh_dedup(
       it may under-drop. Set ``None`` for the exact all-pairs join.
 
     The banded self-join reads the signature pipeline twice, so the
-    signatures are materialized once by default — via eager
-    ``localCheckpoint`` rather than ``persist()``: Spark's columnar
-    cache encodes array columns row-by-row (measured ~12x the cost of a
-    signature recompute, SCALE.md), while checkpoint blocks store plain
-    rows and are freed by the ContextCleaner when the DataFrame is
+    signatures are materialized once — via eager ``localCheckpoint``
+    rather than ``persist()``: Spark's columnar cache encodes array
+    columns row-by-row (measured ~12x the cost of a signature
+    recompute, SCALE.md), while checkpoint blocks store plain rows and
+    are freed by the ContextCleaner when the DataFrame is
     garbage-collected — no unpersist bookkeeping, no cache leak across a
-    long session. Disable to keep the plan fully lazy (signatures are
-    then recomputed per read).
+    long session.
     """
-    make_sigs = (
-        minhash_signatures_md5 if signature_fn == "md5" else minhash_signatures
-    )
-    sigs = make_sigs(df, text_column, id_column, num_hashes, shingle_size)
-    if cache_signatures:
-        sigs = sigs.localCheckpoint(eager=True)
+    sigs = minhash_signatures_md5(
+        df, text_column, id_column, num_hashes, shingle_size
+    ).localCheckpoint(eager=True)
     exact_drops = None
     if collapse_identical:
         # One slim shuffle keyed on the signature array itself (exact —
@@ -496,7 +392,6 @@ def build_minhash_index(
     shingle_size: int = 5,
     bands: int = 8,
     seed: int = 42,
-    signature_fn: str = "md5",
     materialize: bool = True,
 ) -> "AnnIndex":
     """Build a reusable near-dup index: the banded MinHash signature
@@ -505,10 +400,7 @@ def build_minhash_index(
     it like the ANN indexes to persist across jobs."""
     from .similarity import AnnIndex
 
-    make_sigs = (
-        minhash_signatures_md5 if signature_fn == "md5" else minhash_signatures
-    )
-    sigs = make_sigs(
+    sigs = minhash_signatures_md5(
         df, text_column, id_column, num_hashes, shingle_size, seed=seed
     )
     banded = _banded_signatures(sigs, id_column, bands, num_hashes)
@@ -521,7 +413,8 @@ def build_minhash_index(
         "shingle_size": shingle_size,
         "bands": bands,
         "seed": seed,
-        "signature_fn": signature_fn,
+        # The only signer; kept so saved indexes keep their format.
+        "signature_fn": "md5",
     }
     return AnnIndex("minhash", banded, params)
 
@@ -644,12 +537,12 @@ def banded_batch(index: "AnnIndex", new_docs: DataFrame) -> DataFrame:
     if index.kind != "minhash":
         raise ValueError(f"expected a minhash index, got {index.kind!r}")
     p = index.params
-    make_sigs = (
-        minhash_signatures_md5
-        if p["signature_fn"] == "md5"
-        else minhash_signatures
-    )
-    sigs = make_sigs(
+    if p["signature_fn"] != "md5":
+        raise ValueError(
+            f"index signed with {p['signature_fn']!r}; only 'md5' "
+            "signatures are supported"
+        )
+    sigs = minhash_signatures_md5(
         new_docs,
         p["text_column"],
         p["id_column"],
@@ -866,18 +759,22 @@ def embedding_cosine_dedup(
     stays linear; pass an explicit ``bits`` for reproducible buckets.
     ``plane_kind="rademacher"`` + ``round_scores=True`` make the LSH
     path fully SQL-replayable (deterministic planes, rounded
-    threshold compare) — the graded-query configuration."""
-    from .similarity import _cosine_pairs_lsh, _cosine_pairs_brute
+    threshold compare) — the graded-query configuration.
 
-    pairs = (
-        _cosine_pairs_lsh(
+    ``use_lsh=False`` is the exact reference: every row is scored
+    against the whole (guarded, broadcast) corpus."""
+    from .similarity import _cosine_dups_brute, _cosine_dups_lsh
+
+    to_drop = (
+        _cosine_dups_lsh(
             df, embedding_column, id_column, threshold, bits=bits,
             plane_kind=plane_kind, round_scores=round_scores,
         )
         if use_lsh
-        else _cosine_pairs_brute(df, embedding_column, id_column, threshold)
+        else _cosine_dups_brute(df, embedding_column, id_column, threshold)
     )
-    to_drop = pairs.select(F.col("id_b").alias(id_column)).distinct()
+    # left_anti tolerates duplicate right-side keys (an id dropped in
+    # several tables) — no distinct shuffle needed.
     return df.join(to_drop, on=id_column, how="left_anti")
 
 

@@ -61,7 +61,7 @@ def q_minhash_dedup(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     kept = D.minhash_lsh_dedup(
         docs, "text", "doc_id", num_hashes=32, bands=8,
-        min_signature_similarity=0.7, signature_fn="md5",
+        min_signature_similarity=0.7,
     )
     return kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_kept"))
 
@@ -993,7 +993,7 @@ def q_cosine_dedup(spark, sf_dir):
     # oracle-checked — the same graded-surface treatment as
     # chunk_vector_topk's IVF routing (r4 verdict #2/#3 pattern). The
     # exact O(n^2) pairwise path remains the test-side cross-check
-    # (tests/test_pipeline_operators.py::test_cosine_dedup_lsh_vs_exact).
+    # (tests/test_ann_index.py::TestAutoLshBits::test_cosine_dedup_lsh_vs_exact).
     emb = _read(spark, sf_dir, "embeddings")
     kept = D.embedding_cosine_dedup(
         emb, "embedding", "vec_id", threshold=0.97,
@@ -5489,7 +5489,7 @@ def q_adversarial_dedup_stats(spark, sf_dir):
     corpus = A.adversarial_corpus(spark, docs)
     kept = D.minhash_lsh_dedup(
         corpus, "text", "doc_id", num_hashes=32, bands=8,
-        min_signature_similarity=0.7, signature_fn="md5",
+        min_signature_similarity=0.7,
         hot_bucket_cap=128,
     )
     return kept.groupBy(A.segment_column().alias("segment")).agg(
@@ -5744,7 +5744,7 @@ def q_incremental_dedup(spark, sf_dir):
     batch1 = docs.filter("doc_id % 7 = 1")
     batch2 = docs.filter("doc_id % 7 = 2")
     idx = D.build_minhash_index(
-        corpus, "text", "doc_id", num_hashes=32, bands=8, signature_fn="md5"
+        corpus, "text", "doc_id", num_hashes=32, bands=8
     )
     # Sign batch1 once (checkpointed) — the query and the extend both
     # reuse the banded rows, identical values to signing twice.
@@ -5850,7 +5850,7 @@ def q_index_compaction(spark, sf_dir):
     corpus = docs.filter("doc_id % 5 != 0")
     probe = docs.filter("doc_id % 5 = 0")
     idx = D.build_minhash_index(
-        corpus, "text", "doc_id", num_hashes=32, bands=8, signature_fn="md5"
+        corpus, "text", "doc_id", num_hashes=32, bands=8
     )
     idx = D.extend_minhash_index(idx, corpus.filter("doc_id % 5 = 1"))
     deleted = corpus.filter("doc_id % 10 = 3").select("doc_id")
@@ -5884,7 +5884,7 @@ def q_streaming_incremental_dedup(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     corpus = docs.filter("doc_id % 7 NOT IN (1, 2)")
     idx = D.build_minhash_index(
-        corpus, "text", "doc_id", num_hashes=32, bands=8, signature_fn="md5"
+        corpus, "text", "doc_id", num_hashes=32, bands=8
     )
 
     tmp = tempfile.mkdtemp(prefix="tas_stream_dedup_")

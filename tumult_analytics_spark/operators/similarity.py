@@ -1,14 +1,39 @@
-"""Approximate-nearest-neighbor search over an embedding column.
+"""Nearest-neighbor search and near-duplicate scoring over an embedding
+column.
 
-Two paths:
-- brute_force_cosine_topk: exact baseline. Per-partition numpy matmul of
-  the query block against a broadcast corpus matrix; top-k via window.
-  O(|Q| * |C|): the correctness oracle for the ANN path.
-- lsh_cosine_topk: random-hyperplane (sign) LSH. One vectorized
-  mapInPandas pass computes the unit-normalized vector and every table's
-  bucket id (numpy matmul against the hyperplane matrix); then per-bucket
-  applyInPandas computes the pairwise block with one matmul. The bucket
-  join is a plain shuffled groupBy AQE can handle.
+Four search paths, each with an index form (an :class:`AnnIndex` built
+once and queried many times; the one-shot functions are an
+unmaterialized build followed by one search of the corpus against
+itself):
+- brute force (:func:`brute_force_cosine_topk`): exact. Each query
+  partition does one numpy matmul against a broadcast corpus matrix,
+  guarded by ``max_collect_rows``. O(|Q| * |C|): the correctness
+  oracle for the approximate paths. No index form.
+- sign LSH (:func:`lsh_cosine_topk`; :func:`build_lsh_index` /
+  :func:`query_lsh_index`): random-hyperplane buckets. One Arrow pass
+  computes the unit vector and every table's bucket id; the tables are
+  melted to one (table, bucket) key, so one shuffled groupBy scores
+  every bucket with one matmul per slice. Hot buckets above
+  ``bucket_cap`` are searched in id-ordered segments.
+- IVF (:func:`ivf_cosine_topk`; :func:`build_ivf_index` /
+  :func:`query_ivf_index`): k-means (or pinned) coarse cells; each
+  query probes its ``nprobe`` nearest cells through one cogroup.
+- IVF-PQ (:func:`build_ivfpq_index` / :func:`query_ivfpq_index`): the
+  index stores a cell id plus product-quantization codes instead of
+  floats; cells are scored by asymmetric distance (lookup-table
+  gathers), optionally re-ranked exactly against the corpus.
+
+Two private steps hold the scoring decisions every path shares:
+- :func:`_topk_rows`: one (query slice x corpus) score block in,
+  ``(query_id, neighbor_id, cosine)`` rows out. Self-matches are
+  excluded by id equality and the per-query top-k comes from
+  :func:`_topk_indices` (raw-score argpartition, or the rounded,
+  id-tie-broken order that SQL replays).
+- :func:`_smaller_id_dups`: the near-duplicate drop rule. It returns
+  the ids that have a strictly smaller-id row with cosine >= a
+  threshold. ``dedup.embedding_cosine_dedup`` and
+  ``clustering.semantic_dedup`` use it on both their exact and their
+  LSH paths.
 
 Design rule learned by measurement: Catalyst higher-order-function
 lambdas (zip_with/aggregate) are interpreted, NOT codegen'd — per-element
@@ -152,6 +177,24 @@ def _normalize_and_bucket(
     ).mapInPandas(kernel, out_schema)
 
 
+def _unit_rows(vectors):
+    """(n, dim) float64 matrix of ``vectors`` scaled to unit norm; zero
+    vectors stay zero."""
+    import numpy as np
+
+    M = np.stack(list(vectors)).astype(np.float64, copy=False)
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
+
+def _collect_unit_rows(df: DataFrame, embedding_column: str, id_column: str):
+    """Driver-side ``(ids, unit-vector matrix)`` of a brute-force corpus
+    (callers guard its size first)."""
+    import numpy as np
+
+    rows = df.select(id_column, embedding_column).collect()
+    return np.array([r[0] for r in rows]), _unit_rows([r[1] for r in rows])
+
+
 def brute_force_cosine_topk(
     corpus: DataFrame,
     embedding_column: str,
@@ -175,8 +218,8 @@ def brute_force_cosine_topk(
     pairs themselves (e.g. on round(cosine, 6) with an id tie-break)
     and pass ``k >= corpus rows``, where every pair survives the
     ``rank <= k`` filter anyway: the kernel already emits only the
-    per-query top-``min(k, n-1)`` pairs, so the window is a full sort
-    of the entire pair set that changes nothing but the column.
+    per-query top-k non-self pairs, so the window is a full sort of
+    the entire pair set that changes nothing but the column.
 
     ``deterministic=True`` selects the per-query top-k INSIDE the
     kernel by (round(cosine, 6) desc, id asc) — the same composite
@@ -193,67 +236,37 @@ def brute_force_cosine_topk(
 
     _guard_brute_force(corpus, max_collect_rows, "brute_force_cosine_topk")
     qdf = queries if queries is not None else corpus
-    id_field = corpus.schema[id_column]
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_field.dataType, True),
-            T.StructField("neighbor_id", id_field.dataType, True),
-            T.StructField("cosine", T.DoubleType(), True),
-        ]
-    )
-    corpus_rows = corpus.select(id_column, embedding_column).collect()
-    c_ids = np.array([r[0] for r in corpus_rows])
-    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in corpus_rows])
-    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    c_ids, C = _collect_unit_rows(corpus, embedding_column, id_column)
     sc = corpus.sparkSession.sparkContext
     bc_ids, bc_C = sc.broadcast(c_ids), sc.broadcast(C)
 
     def kernel(batches):
         ids_c, Cm = bc_ids.value, bc_C.value
-        # Reused score buffer — see _cosine_pairs_brute for why.
+        # One reusable score buffer per task: per-slice ~|corpus|-wide
+        # fresh allocations across 32 parallel workers caused an
+        # mmap/page-fault storm (96% system time at 200k rows).
         Sbuf = np.empty((_BRUTE_SLICE, len(ids_c)))
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
                 continue
-            Qa = np.stack(pdf[embedding_column].to_numpy()).astype(np.float64)
-            Qa = Qa / np.maximum(np.linalg.norm(Qa, axis=1, keepdims=True), 1e-12)
+            Qa = _unit_rows(pdf[embedding_column])
             qids_a = pdf[id_column].to_numpy()
             for s in range(0, len(qids_a), _BRUTE_SLICE):
                 Q = Qa[s : s + _BRUTE_SLICE]
-                qids = qids_a[s : s + _BRUTE_SLICE]
                 S = np.matmul(Q, Cm.T, out=Sbuf[: len(Q)])  # (block, corpus)
-                self_mask = qids[:, None] == ids_c[None, :]
-                S[self_mask] = -np.inf
-                kk = min(k, S.shape[1] - 1)
-                if deterministic:
-                    idx = _topk_indices(S, ids_c, kk, True)
-                else:
-                    idx = np.argpartition(-S, kth=kk - 1, axis=1)[:, :kk]
-                rows = {
-                    "query_id": np.repeat(qids, kk),
-                    "neighbor_id": ids_c[idx.ravel()],
-                    "cosine": S[
-                        np.repeat(np.arange(len(qids)), kk), idx.ravel()
-                    ],
-                }
-                yield pd.DataFrame(rows)
+                yield _topk_rows(
+                    S, qids_a[s : s + _BRUTE_SLICE], ids_c, k, deterministic
+                )
 
     scored = spread_rows(qdf.select(id_column, embedding_column)).mapInPandas(
-        kernel, out_schema
+        kernel, _topk_out_schema(corpus.schema[id_column])
     )
-    # The kernel emits exactly min(k, n-1) pairs per query, so the
-    # rank <= k filter below never drops a row — the window exists only
-    # to ATTACH the rank column. Callers that re-rank themselves skip
-    # the full pair-set sort via include_rank=False (same row set).
-    if not include_rank:
-        return scored
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    # The kernel emits at most k pairs per query, so the rank <= k
+    # filter below never drops a row — the window exists only to ATTACH
+    # the rank column. Callers that re-rank themselves skip the full
+    # pair-set sort via include_rank=False (same row set).
+    return scored if not include_rank else _rank_topk(scored, k, None)
 
 
 def _topk_indices(S, ids, kk: int, deterministic: bool):
@@ -287,69 +300,30 @@ def _topk_indices(S, ids, kk: int, deterministic: bool):
     return np.argpartition(-Sr, kth=kk - 1, axis=1)[:, :kk]
 
 
-def _bucket_topk_fn(
-    id_column: str,
-    k: int,
-    deterministic: bool = False,
-    bucket_cap: "Optional[int]" = None,
-):
+def _topk_rows(S, qids, cids, k: int, deterministic: bool):
+    """The top-k step of every search path: ``S`` is one (query slice x
+    corpus) score block (overwritten), ``qids``/``cids`` its row and
+    column ids. Self-matches (equal ids) score ``-inf``; each query
+    selects its top ``min(k, |corpus|)`` columns by
+    :func:`_topk_indices` and drops the excluded self entry, so a query
+    outside the corpus keeps ``min(k, |corpus|)`` neighbors and one
+    inside keeps ``min(k, |corpus| - 1)``. Returns ``(query_id,
+    neighbor_id, cosine)`` rows."""
     import numpy as np
     import pandas as pd
 
-    def bucket_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # Row-sliced like _block_topk_fn: a hot bucket must not put an
-        # O(|bucket|^2) score matrix in one task's memory.
-        ids = pdf[id_column].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
-        M = np.stack(pdf["__nv__"].to_numpy())
-        if bucket_cap is not None and len(ids) > bucket_cap:
-            # Hot-bucket compute guard: an m-row bucket costs O(m^2)
-            # multiply-adds (row slicing bounds MEMORY, not compute —
-            # a 10^6-copy boilerplate cluster is 10^12 dot products).
-            # Split the bucket into id-ordered segments of <= cap rows
-            # and search within segments only: O(m * cap) compute,
-            # linear in m. Oversized buckets are near-duplicate
-            # clusters in practice, so segment-local neighbors are
-            # representative; other LSH tables independently re-bucket
-            # the same rows, recovering cross-segment pairs.
-            order = np.argsort(ids, kind="stable")
-            outs = []
-            for s in range(0, len(ids), int(bucket_cap)):
-                seg = order[s : s + int(bucket_cap)]
-                if len(seg) < 2:
-                    continue
-                outs.append(
-                    bucket_topk(key, pdf.iloc[seg].reset_index(drop=True))
-                )
-            if not outs:
-                return pd.DataFrame(
-                    columns=["query_id", "neighbor_id", "cosine"]
-                )
-            return pd.concat(outs, ignore_index=True)
-        kk = min(k, len(ids) - 1)
-        Sbuf = np.empty((min(_BRUTE_SLICE, len(ids)), len(ids)))
-        outs = []
-        for s in range(0, len(ids), _BRUTE_SLICE):
-            rows = M[s : s + _BRUTE_SLICE]
-            S = np.matmul(rows, M.T, out=Sbuf[: len(rows)])
-            nrow = S.shape[0]
-            S[np.arange(nrow), np.arange(s, s + nrow)] = -np.inf  # self
-            idx = _topk_indices(S, ids, kk, deterministic)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids[s : s + nrow], kk),
-                        "neighbor_id": ids[idx.ravel()],
-                        "cosine": S[
-                            np.repeat(np.arange(nrow), kk), idx.ravel()
-                        ],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return bucket_topk
+    S[qids[:, None] == cids[None, :]] = -np.inf
+    kk = min(k, S.shape[1])
+    flat = _topk_indices(S, cids, kk, deterministic).ravel()
+    scores = S[np.repeat(np.arange(len(qids)), kk), flat]
+    keep = np.isfinite(scores)
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, kk)[keep],
+            "neighbor_id": cids[flat][keep],
+            "cosine": scores[keep],
+        }
+    )
 
 
 def lsh_cosine_topk(
@@ -396,38 +370,44 @@ def lsh_cosine_topk(
     pair survives the filter anyway: the kernel already truncates to
     the per-(table, bucket) top-``k``, so the window is a per-query
     sort that changes nothing but the column.
+
+    A one-shot search is an unmaterialized :func:`build_lsh_index`
+    whose buckets are each searched against themselves.
     """
-    if bits is None:
-        bits = _auto_lsh_bits(corpus.count())
-    if plane_kind == "rademacher":
-        planes = [
-            _hyperplanes_rademacher(dim, bits, t) for t in range(tables)
+    import numpy as np
+    import pandas as pd
+
+    index = build_lsh_index(
+        corpus, embedding_column, id_column, bits=bits, tables=tables,
+        dim=dim, seed=seed, plane_kind=plane_kind, materialize=False,
+    )
+    block_topk = _block_topk_fn(id_column, k, deterministic)
+
+    def bucket_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        if bucket_cap is None or len(pdf) <= bucket_cap:
+            return block_topk(key, pdf, pdf)
+        # Hot-bucket compute guard: an m-row bucket costs O(m^2)
+        # multiply-adds (row slicing bounds MEMORY, not compute — a
+        # 10^6-copy boilerplate cluster is 10^12 dot products). Split
+        # the bucket into id-ordered segments of <= cap rows and search
+        # within segments only: O(m * cap) compute, linear in m.
+        # Oversized buckets are near-duplicate clusters in practice, so
+        # segment-local neighbors are representative; other LSH tables
+        # independently re-bucket the same rows, recovering
+        # cross-segment pairs.
+        order = np.argsort(pdf[id_column].to_numpy(), kind="stable")
+        segs = [
+            pdf.iloc[order[s : s + bucket_cap]].reset_index(drop=True)
+            for s in range(0, len(order), bucket_cap)
         ]
-    else:
-        planes = [_hyperplanes(dim, bits, seed + 1000 * t) for t in range(tables)]
-    prepped = _normalize_and_bucket(corpus, embedding_column, id_column, planes)
-    melted = _melt_tables(prepped, id_column, tables)
-    id_field = corpus.schema[id_column]
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_field.dataType, True),
-            T.StructField("neighbor_id", id_field.dataType, True),
-            T.StructField("cosine", T.DoubleType(), True),
-        ]
+        return pd.concat(
+            [block_topk(key, seg, seg) for seg in segs], ignore_index=True
+        )
+
+    cand = index.df.groupBy("__t__", "__bkt__").applyInPandas(
+        bucket_topk, _topk_out_schema(corpus.schema[id_column])
     )
-    fn = _bucket_topk_fn(id_column, k, deterministic, bucket_cap=bucket_cap)
-    cand = melted.groupBy("__t__", "__bkt__").applyInPandas(fn, out_schema)
-    best = cand.groupBy("query_id", "neighbor_id").agg(
-        F.max("cosine").alias("cosine")
-    )
-    if not include_rank:
-        return best
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return best.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= (k if rank_k is None else rank_k)
-    )
+    return _merge_tables(cand, k, rank_k, include_rank)
 
 
 def _melt_tables(
@@ -444,13 +424,14 @@ def _melt_tables(
 
 def _block_topk_fn(id_column: str, k: int, deterministic: bool):
     """Cogrouped (queries x corpus-block) top-k: per QUERY SLICE of
-    ``_BRUTE_SLICE`` rows, one matmul against the cell's corpus block,
-    self-matches excluded. Shared by the IVF cell search and the
-    persisted-index query paths. Slicing bounds peak temp memory at
-    ``_BRUTE_SLICE * |cell| * 8`` bytes per score/key matrix — without
-    it a 16-cell index over a 200k corpus put a 5 GB matrix (x2 with
-    the rounded copy) in EVERY task (found by the sf10 campaign, same
-    defect class as the brute-kernel fix it mirrors)."""
+    ``_BRUTE_SLICE`` rows, one matmul against the block's unit vectors
+    (``__nv__``), then :func:`_topk_rows`. Shared by the LSH bucket
+    self-search, the IVF cell search and the persisted-index query
+    paths. Slicing bounds peak temp memory at ``_BRUTE_SLICE * |cell| *
+    8`` bytes per score/key matrix — without it a 16-cell index over a
+    200k corpus put a 5 GB matrix (x2 with the rounded copy) in EVERY
+    task (found by the sf10 campaign, same defect class as the
+    brute-kernel fix it mirrors)."""
     import numpy as np
     import pandas as pd
 
@@ -458,28 +439,20 @@ def _block_topk_fn(id_column: str, k: int, deterministic: bool):
         if len(qpdf) == 0 or len(cpdf) == 0:
             return pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
         Qa = np.stack(qpdf["__nv__"].to_numpy())
-        C = np.stack(cpdf["__nv__"].to_numpy())
+        # A self-search scores one matrix against itself, so a block that
+        # fits in one slice takes numpy's symmetric (syrk) kernel and
+        # its scores equal a plain ``M @ M.T`` bit for bit.
+        C = Qa if cpdf is qpdf else np.stack(cpdf["__nv__"].to_numpy())
         qids_a = qpdf[id_column].to_numpy()
         cids = cpdf[id_column].to_numpy()
         Sbuf = np.empty((min(_BRUTE_SLICE, len(qids_a)), len(cids)))
         outs = []
         for s in range(0, len(qids_a), _BRUTE_SLICE):
             Q = Qa[s : s + _BRUTE_SLICE]
-            qids = qids_a[s : s + _BRUTE_SLICE]
             S = np.matmul(Q, C.T, out=Sbuf[: len(Q)])
-            S[qids[:, None] == cids[None, :]] = -np.inf  # exclude self
-            kk = min(k, S.shape[1])
-            idx = _topk_indices(S, cids, kk, deterministic)
-            flat = idx.ravel()
-            rows = np.repeat(np.arange(len(qids)), kk)
-            keep = np.isfinite(S[rows, flat])
             outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, kk)[keep],
-                        "neighbor_id": cids[flat][keep],
-                        "cosine": S[rows, flat][keep],
-                    }
+                _topk_rows(
+                    S, qids_a[s : s + _BRUTE_SLICE], cids, k, deterministic
                 )
             )
         return pd.concat(outs, ignore_index=True)
@@ -504,6 +477,15 @@ def _rank_topk(best: DataFrame, k: int, rank_k) -> DataFrame:
     return best.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= (k if rank_k is None else rank_k)
     )
+
+
+def _merge_tables(cand: DataFrame, k: int, rank_k, include_rank: bool):
+    """Multi-table LSH candidates -> one row per (query, neighbor) with
+    its best cosine, ranked unless ``include_rank`` is False."""
+    best = cand.groupBy("query_id", "neighbor_id").agg(
+        F.max("cosine").alias("cosine")
+    )
+    return best if not include_rank else _rank_topk(best, k, rank_k)
 
 
 class AnnIndex:
@@ -703,10 +685,7 @@ def query_lsh_index(
         .cogroup(index.df.groupBy("__t__", "__bkt__"))
         .applyInPandas(fn, _topk_out_schema(id_field))
     )
-    best = cand.groupBy("query_id", "neighbor_id").agg(
-        F.max("cosine").alias("cosine")
-    )
-    return best if not include_rank else _rank_topk(best, k, rank_k)
+    return _merge_tables(cand, k, rank_k, include_rank)
 
 
 def extend_lsh_index(
@@ -857,63 +836,75 @@ def dequantize_embeddings(
     )
 
 
-def _pairs_schema(df: DataFrame, id_column: str) -> T.StructType:
-    id_field = df.schema[id_column]
+def _smaller_id_dups(
+    Q, qids, threshold: float, round_scores: bool, C=None, cids=None
+):
+    """The near-duplicate drop rule: the ids in ``qids`` whose unit
+    vector (row of ``Q``) has cosine >= ``threshold`` with some row of
+    ``C`` (default: ``Q`` itself) whose id is strictly smaller. Ids are
+    compared by value, so neither side needs sorting, and equal ids
+    never match. ``round_scores`` compares ``round(cosine, 6)``, the
+    form a SQL oracle replays. Scores are computed ``_BRUTE_SLICE`` rows
+    at a time into one reused buffer, so peak temp memory is
+    ``_BRUTE_SLICE * |C| * 8`` bytes however large the block is."""
+    import numpy as np
+
+    if C is None:
+        C, cids = Q, qids
+    drop = np.zeros(len(qids), dtype=bool)
+    Sbuf = np.empty((min(_BRUTE_SLICE, len(qids)), len(cids)))
+    for s in range(0, len(qids), _BRUTE_SLICE):
+        rows = Q[s : s + _BRUTE_SLICE]
+        S = np.matmul(rows, C.T, out=Sbuf[: len(rows)])
+        if round_scores:
+            S = np.round(S, 6, out=S)
+        smaller = cids[None, :] < qids[s : s + _BRUTE_SLICE, None]
+        drop[s : s + _BRUTE_SLICE] = ((S >= threshold) & smaller).any(axis=1)
+    return qids[drop]
+
+
+def _dup_ids_schema(df: DataFrame, id_column: str) -> T.StructType:
     return T.StructType(
-        [
-            T.StructField("id_a", id_field.dataType, True),
-            T.StructField("id_b", id_field.dataType, True),
-            T.StructField("cosine", T.DoubleType(), True),
-        ]
+        [T.StructField(id_column, df.schema[id_column].dataType, True)]
     )
 
 
-def _cosine_pairs_brute(
+def _cosine_dups_brute(
     df: DataFrame,
     embedding_column: str,
     id_column: str,
     threshold: float,
     max_collect_rows: int = BRUTE_FORCE_MAX_ROWS,
 ) -> DataFrame:
-    """All pairs (id_a < id_b) with cosine >= threshold, exact."""
-    import numpy as np
+    """Exact :func:`_smaller_id_dups` over the whole frame: the ids that
+    have a smaller-id row with cosine >= threshold. Each partition is
+    scored against the broadcast corpus."""
     import pandas as pd
 
     _guard_brute_force(df, max_collect_rows, "embedding_cosine_dedup(use_lsh=False)")
-    rows = df.select(id_column, embedding_column).collect()
-    ids = np.array([r[0] for r in rows])
-    C = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    ids, C = _collect_unit_rows(df, embedding_column, id_column)
     sc = df.sparkSession.sparkContext
     bc_ids, bc_C = sc.broadcast(ids), sc.broadcast(C)
-    out_schema = _pairs_schema(df, id_column)
 
     def kernel(batches):
-        ids_c, Cm = bc_ids.value, bc_C.value
-        # One reusable score buffer per task: per-slice ~|corpus|-wide
-        # fresh allocations across 32 parallel workers caused an
-        # mmap/page-fault storm (96% system time at 200k rows).
-        Sbuf = np.empty((_BRUTE_SLICE, len(ids_c)))
         for pdf in batches:
             if len(pdf) == 0:
-                yield pd.DataFrame(columns=["id_a", "id_b", "cosine"])
                 continue
-            Qa = np.stack(pdf[embedding_column].to_numpy()).astype(np.float64)
-            Qa = Qa / np.maximum(np.linalg.norm(Qa, axis=1, keepdims=True), 1e-12)
-            qids_a = pdf[id_column].to_numpy()
-            for s in range(0, len(qids_a), _BRUTE_SLICE):
-                Q = Qa[s : s + _BRUTE_SLICE]
-                qids = qids_a[s : s + _BRUTE_SLICE]
-                S = np.matmul(Q, Cm.T, out=Sbuf[: len(Q)])
-                qi, ci = np.where(
-                    (S >= threshold) & (qids[:, None] < ids_c[None, :])
-                )
-                yield pd.DataFrame(
-                    {"id_a": qids[qi], "id_b": ids_c[ci], "cosine": S[qi, ci]}
-                )
+            yield pd.DataFrame(
+                {
+                    id_column: _smaller_id_dups(
+                        _unit_rows(pdf[embedding_column]),
+                        pdf[id_column].to_numpy(),
+                        threshold,
+                        False,
+                        bc_C.value,
+                        bc_ids.value,
+                    )
+                }
+            )
 
     return spread_rows(df.select(id_column, embedding_column)).mapInPandas(
-        kernel, out_schema
+        kernel, _dup_ids_schema(df, id_column)
     )
 
 
@@ -933,7 +924,7 @@ def _auto_lsh_bits(n_rows: int, target: int = LSH_TARGET_BUCKET_ROWS) -> int:
                       if n_rows > target else 4))
 
 
-def _cosine_pairs_lsh(
+def _cosine_dups_lsh(
     df: DataFrame,
     embedding_column: str,
     id_column: str,
@@ -945,7 +936,9 @@ def _cosine_pairs_lsh(
     plane_kind: str = "gauss",
     round_scores: bool = False,
 ) -> DataFrame:
-    """Same-bucket pairs (id_a < id_b) with cosine >= threshold.
+    """:func:`_smaller_id_dups` within each (table, bucket): the ids
+    with a same-bucket smaller-id row at cosine >= threshold. An id
+    dropped in several tables appears once per table.
 
     ``bits=None`` (default) derives the bucket width from the corpus
     size (one cheap count job) so mean bucket occupancy stays around
@@ -957,44 +950,23 @@ def _cosine_pairs_lsh(
     import numpy as np
     import pandas as pd
 
-    if bits is None:
-        bits = _auto_lsh_bits(df.count())
-    planes = _planes_for(plane_kind, dim, bits, tables, seed)
-    prepped = _normalize_and_bucket(df, embedding_column, id_column, planes)
-    melted = _melt_tables(prepped, id_column, tables)
-    out_schema = _pairs_schema(df, id_column)
+    index = build_lsh_index(
+        df, embedding_column, id_column, bits=bits, tables=tables, dim=dim,
+        seed=seed, plane_kind=plane_kind, materialize=False,
+    )
 
-    def pairs_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        # Row-sliced with a reused score buffer: per-slice fresh
-        # allocations across 32 parallel workers caused an mmap/page-
-        # fault storm (96% system time) at the 200k-row scale campaign.
-        ids = pdf[id_column].to_numpy()
-        if len(ids) < 2:
-            return pd.DataFrame(columns=["id_a", "id_b", "cosine"])
-        M = np.stack(pdf["__nv__"].to_numpy())
-        n = len(ids)
-        Sbuf = np.empty((min(_BRUTE_SLICE, n), n))
-        outs = []
-        for s in range(0, n, _BRUTE_SLICE):
-            rows = M[s : s + _BRUTE_SLICE]
-            S = np.matmul(rows, M.T, out=Sbuf[: len(rows)])
-            Sc = np.round(S, 6) if round_scores else S
-            ai, bi = np.where(
-                (Sc >= threshold) & (ids[s : s + len(rows), None] < ids[None, :])
-            )
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "id_a": ids[s + ai],
-                        "id_b": ids[bi],
-                        "cosine": S[ai, bi],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+    def dups_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = _smaller_id_dups(
+            np.stack(pdf["__nv__"].to_numpy()),
+            pdf[id_column].to_numpy(),
+            threshold,
+            round_scores,
+        )
+        return pd.DataFrame({id_column: ids})
 
-    cand = melted.groupBy("__t__", "__bkt__").applyInPandas(pairs_fn, out_schema)
-    return cand.dropDuplicates(["id_a", "id_b"])
+    return index.df.groupBy("__t__", "__bkt__").applyInPandas(
+        dups_fn, _dup_ids_schema(df, id_column)
+    )
 
 
 def _kmeans_centroids(X, nlist: int, iters: int = 8, seed: int = 42):
@@ -1106,8 +1078,7 @@ def _ivf_centroids(
         .limit(sample_size)
         .collect()
     )
-    X = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows([r[0] for r in sample])
     return _kmeans_centroids(X, nlist, seed=seed)
 
 
@@ -1139,8 +1110,7 @@ def _ivf_assign(
             if len(pdf) == 0:
                 yield pd.DataFrame(columns=[id_field.name, "__nv__", "__cell__"])
                 continue
-            M = np.stack(pdf[embedding_column].to_numpy()).astype(np.float64)
-            M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+            M = _unit_rows(pdf[embedding_column])
             S = M @ cents_m.T  # (rows, nlist)
             p = min(nprobe, S.shape[1])
             # Top-p cells by (rounded score desc, centroid index asc)
@@ -1302,8 +1272,7 @@ def train_pq_codebooks(
         .limit(sample_size)
         .collect()
     )
-    X = np.stack([np.asarray(r[0], dtype=np.float64) for r in sample])
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows([r[0] for r in sample])
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -1361,8 +1330,7 @@ def _pq_encode_assign(
             if len(pdf) == 0:
                 yield pd.DataFrame(columns=[id_field.name, "__cell__", "__code__"])
                 continue
-            M = np.stack(pdf[embedding_column].to_numpy()).astype(np.float64)
-            M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+            M = _unit_rows(pdf[embedding_column])
             S = np.round(M @ cents.T, 6)
             # lowest centroid index wins rounded ties (argmax returns the
             # first maximal entry).
@@ -1460,7 +1428,7 @@ def build_ivf_family(
     every codebook's argmin-L2 codes in the same Arrow kernel,
     checkpoints the combined frame once, and hands each index a
     column-pruned projection — row-for-row the frames the separate
-    builders emit (locked by tests/test_similarity.py). At corpus
+    builders emit (locked by tests/test_ann_index.py). At corpus
     scale this is 1 scan instead of 1+N.
     """
     import numpy as np
@@ -1498,10 +1466,7 @@ def build_ivf_family(
             if len(pdf) == 0:
                 yield pd.DataFrame(columns=col_names)
                 continue
-            M = np.stack(pdf[embedding_column].to_numpy()).astype(np.float64)
-            M = M / np.maximum(
-                np.linalg.norm(M, axis=1, keepdims=True), 1e-12
-            )
+            M = _unit_rows(pdf[embedding_column])
             S = np.round(M @ cents_m.T, 6)
             # first maximal entry == _ivf_assign's stable argsort top-1
             cell = np.argmax(S, axis=1).astype(np.int32)
@@ -1562,8 +1527,8 @@ def _pq_block_topk_fn(id_column: str, k: int, bc_CB, deterministic: bool):
     """Cogrouped (queries x corpus-cell) ADC top-k: per query slice of
     ``_BRUTE_SLICE`` rows, one (slice x 2^nbits) lookup table per
     subspace, scored with m gathers — the corpus side contributes only
-    int codes. Slicing bounds the (slice x |cell|) score matrix the
-    same way as :func:`_block_topk_fn`."""
+    int codes — then :func:`_topk_rows`. Slicing bounds the (slice x
+    |cell|) score matrix the same way as :func:`_block_topk_fn`."""
     import numpy as np
     import pandas as pd
 
@@ -1582,25 +1547,14 @@ def _pq_block_topk_fn(id_column: str, k: int, bc_CB, deterministic: bool):
         outs = []
         for s in range(0, len(qids_a), _BRUTE_SLICE):
             Q = Qa[s : s + _BRUTE_SLICE]
-            qids = qids_a[s : s + _BRUTE_SLICE]
             S = Sbuf[: len(Q)]
             S.fill(0.0)
             for j in range(m):
                 lut = Q[:, j * sub : (j + 1) * sub] @ CB[j].T  # (slice, ksz)
                 S += np.take(lut, Cd[:, j], axis=1, out=Tbuf[: len(Q)])
-            S[qids[:, None] == cids[None, :]] = -np.inf  # exclude self
-            kk = min(k, S.shape[1])
-            idx = _topk_indices(S, cids, kk, deterministic)
-            flat = idx.ravel()
-            rows = np.repeat(np.arange(len(qids)), kk)
-            keep = np.isfinite(S[rows, flat])
             outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qids, kk)[keep],
-                        "neighbor_id": cids[flat][keep],
-                        "cosine": S[rows, flat][keep],
-                    }
+                _topk_rows(
+                    S, qids_a[s : s + _BRUTE_SLICE], cids, k, deterministic
                 )
             )
         return pd.concat(outs, ignore_index=True)
