@@ -83,11 +83,12 @@ def test_cross_product_rejects_overlap(spark):
 
 
 def test_join_on_shared_column(spark):
-    k1 = KeySet.from_tuples([(1, "x"), (2, "y")], columns=["a", "b"])
-    k2 = KeySet.from_tuples([(1, "p"), (1, "q")], columns=["a", "c"])
+    k1 = KeySet.from_tuples([(1, "x"), (2, "y"), (None, "z")], columns=["a", "b"])
+    k2 = KeySet.from_tuples([(1, "p"), (1, "q"), (None, "r")], columns=["a", "c"])
     joined = k1.join(k2)
     got = {(r["a"], r["b"], r["c"]) for r in joined.dataframe().collect()}
-    assert got == {(1, "x", "p"), (1, "x", "q")}
+    # null keys match each other (reference join_on_nulls=True)
+    assert got == {(1, "x", "p"), (1, "x", "q"), (None, "z", "r")}
 
 
 def test_join_requires_shared_column(spark):
@@ -96,8 +97,8 @@ def test_join_requires_shared_column(spark):
 
 
 def test_subtract_and_union(spark):
-    k = KeySet.from_dict({"a": [1, 2, 3]})
-    minus = k - KeySet.from_tuples([(2,)], columns=["a"])
+    k = KeySet.from_tuples([(1,), (2,), (3,), (None,)], columns=["a"])
+    minus = k - KeySet.from_tuples([(2,), (None,)], columns=["a"])
     assert {r["a"] for r in minus.dataframe().collect()} == {1, 3}
     both = minus | KeySet.from_tuples([(9,)], columns=["a"])
     assert both.size() == 3

@@ -72,25 +72,43 @@ FULL_SWEEP = bool(
 )
 #: keys whose code changed recently but which the stride may miss: the
 #: default suite grades them too, so a change is always checked against
-#: its own oracles. Here: the 15 keys whose functions reach the shared
-#: top-k / smaller-id threshold steps in ``similarity`` or the single
-#: MinHash signer.
+#: its own oracles. Here: the 34 DP-core keys, every one of which
+#: aggregates through the keyset filter / attach joins.
 TOUCHED_KEYS = [
-    "ann_brute_topk",
-    "ann_lsh_topk",
-    "ann_lsh_index_topk",
-    "ann_ivf_topk",
-    "ann_ivf_index_topk",
-    "ann_ivfpq_index_topk",
-    "ann_recall_stats",
-    "chunk_vector_topk",
-    "cosine_dedup",
-    "semantic_dedup_stats",
-    "minhash_dedup",
-    "adversarial_dedup_stats",
-    "incremental_dedup",
-    "index_compaction",
-    "streaming_incremental_dedup",
+    "count_filter",
+    "groupby_count_keyset",
+    "sum_clamped",
+    "average_clamped",
+    "variance_clamped",
+    "stdev_clamped",
+    "count_distinct",
+    "public_join_count",
+    "private_join_count",
+    "ids_truncated_count",
+    "histogram",
+    "histogram_timestamp",
+    "suppress",
+    "keyset_algebra",
+    "map_derived_column",
+    "get_groups",
+    "quantile_median",
+    "get_bounds",
+    "flat_map_explode",
+    "flat_map_vectorized",
+    "map_vectorized",
+    "flat_map_by_id",
+    "private_join_nonunique",
+    "replace_null_binned",
+    "select_count_distinct",
+    "replace_infinity_sum",
+    "drop_null_and_nan_sum",
+    "drop_infinity_average",
+    "min_max",
+    "multi_quantile",
+    "groups_per_id_count",
+    "view_count",
+    "partition_split_count",
+    "auto_partition_count",
 ]
 SELECTED = (
     QUERIES

@@ -141,24 +141,6 @@ def test_sessionize_events_stateful(spark, events_dir):
         assert r["n_events"] >= 1
 
 
-def test_salted_join_matches_plain_join(spark):
-    from tumult_analytics_spark.utils import salted_join
-
-    left = spark.createDataFrame(
-        pd.DataFrame({"k": ["hot"] * 500 + ["a", "b"], "v": range(502)})
-    )
-    right = spark.createDataFrame(
-        pd.DataFrame({"k": ["hot", "a", "c"], "w": [1, 2, 3]})
-    )
-    salted = salted_join(left, right, ["k"])
-    plain = left.join(right, "k")
-    assert salted.count() == plain.count() == 501
-    # left-join nulls preserved
-    lsalted = salted_join(left, right, ["k"], how="left")
-    assert lsalted.count() == 502
-    assert lsalted.filter("w IS NULL").count() == 1
-
-
 def test_bucketed_join_skips_exchange(spark, tmp_path):
     from tumult_analytics_spark.sources import (
         read_warehouse_table,

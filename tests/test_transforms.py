@@ -109,6 +109,23 @@ def test_join_public_disambiguation(sess, spark):
     assert "X_left" in cols and "X_right" in cols
 
 
+def test_join_public_matches_null_keys(spark):
+    df = spark.createDataFrame([("a", 1), (None, 2), (None, 3)], "k string, v long")
+    pub = spark.createDataFrame([("a", 10), (None, 20)], "k string, w long")
+    s = Session.from_dataframe(INF, "t", df, AddOneRow())
+    q = (
+        QueryBuilder("t")
+        .join_public(pub)
+        .groupby(KeySet.from_tuples([("a",), (None,)], columns=["k"]))
+        .sum("w", 0, 100, name="s")
+    )
+    # both null-key rows match the public null key
+    assert {r["k"]: r["s"] for r in s.evaluate(q, INF).collect()} == {
+        "a": 10,
+        None: 40,
+    }
+
+
 def test_join_public_left(sess):
     q = (
         QueryBuilder("t")

@@ -15,6 +15,7 @@ import pandas as pd
 import pytest
 
 from tumult_analytics_spark import (
+    AddOneRow,
     AddRowsWithID,
     KeySet,
     MaxGroupsPerID,
@@ -23,6 +24,13 @@ from tumult_analytics_spark import (
     PureDPBudget,
     QueryBuilder,
     Session,
+)
+from tumult_analytics_spark.constraints import (
+    DropExcess,
+    DropNonUnique,
+    apply_truncation,
+    truncate_max_rows_per_group_per_id,
+    truncate_max_rows_per_id,
 )
 
 INF = PureDPBudget(float("inf"))
@@ -51,20 +59,54 @@ def test_truncation_deterministic_under_row_order(spark):
     assert results[0] == results[1] == results[2]
 
 
-def test_truncation_deterministic_under_partitioning(spark):
+def _truncated_by_id(df):
+    s = Session.from_dataframe(INF, "t", df, AddRowsWithID("id"))
+    return s, QueryBuilder("t").enforce(MaxRowsPerID(2))
+
+
+def _truncated_by_group(df):
+    s = Session.from_dataframe(INF, "t", df, AddRowsWithID("id"))
+    q = (
+        QueryBuilder("t")
+        .enforce(MaxRowsPerGroupPerID("g", 1))
+        .enforce(MaxGroupsPerID("g", 2))
+    )
+    return s, q
+
+
+def _drop_excess_join(df):
+    # id-free private join on g: DropExcess(1) keeps one hash-chosen row
+    # per g on the left.
+    spark = df.sparkSession
+    right = spark.createDataFrame([("a",), ("b",), ("c",)], "g string")
+    s = (
+        Session.Builder()
+        .with_privacy_budget(INF)
+        .with_private_dataframe("t", df, AddOneRow())
+        .with_private_dataframe("r", right, AddOneRow())
+        .build()
+    )
+    q = QueryBuilder("t").join_private(
+        "r",
+        truncation_strategy_left=DropExcess(1),
+        truncation_strategy_right=DropExcess(1),
+    )
+    return s, q
+
+
+@pytest.mark.parametrize(
+    "truncated",
+    [_truncated_by_id, _truncated_by_group, _drop_excess_join],
+    ids=["max_rows_per_id", "max_rows_per_group_per_id", "drop_excess"],
+)
+def test_truncation_deterministic_under_partitioning(spark, truncated):
     ks = KeySet.from_dict({"g": ["a", "b", "c"]})
     outs = []
     for nparts in (1, 7):
         df = _ids_df(spark, [0, 1, 2, 3, 4]).repartition(nparts)
-        s = Session.from_dataframe(INF, "t", df, AddRowsWithID("id"))
-        q = (
-            QueryBuilder("t")
-            .enforce(MaxRowsPerGroupPerID("g", 1))
-            .enforce(MaxGroupsPerID("g", 2))
-            .groupby(ks)
-            .sum("v", 0, 20, name="s")
-        )
-        outs.append({r["g"]: r["s"] for r in s.evaluate(q, INF).collect()})
+        s, q = truncated(df)
+        out = s.evaluate(q.groupby(ks).sum("v", 0, 20, name="s"), INF)
+        outs.append({r["g"]: r["s"] for r in out.collect()})
     assert outs[0] == outs[1]
 
 
@@ -196,17 +238,13 @@ def test_partition_children_inherit_constraints(spark):
     assert na + nb == 3
 
 
-def test_skew_safe_truncation_matches_default(spark):
-    # One pathologically hot ID + many cold ones: the two-phase salted
-    # form must select exactly the same rows as the single-window form.
-    import pandas as pd
-    from tumult_analytics_spark.config import config
-    from tumult_analytics_spark.constraints import (
-        DropExcess,
-        DropNonUnique,
-        apply_truncation,
-        truncate_max_rows_per_id,
-    )
+def test_truncation_with_hot_key(spark):
+    # One hot ID (5000 rows) and 199 cold ones: every truncation keeps
+    # exactly min(n, k) rows per key, and DropNonUnique drops only the
+    # hot key.
+    from collections import Counter
+
+    from pyspark.sql import functions as F
 
     pdf = pd.DataFrame(
         {
@@ -214,32 +252,23 @@ def test_skew_safe_truncation_matches_default(spark):
             "v": list(range(5000)) + [7] * 199,
         }
     )
-    df = spark.createDataFrame(pdf)
-    plain = sorted(
-        map(tuple, truncate_max_rows_per_id(df, "uid", 3).collect())
-    )
-    with config.features.skew_safe_truncation.enabled():
-        salted = sorted(
-            map(tuple, truncate_max_rows_per_id(df, "uid", 3).collect())
-        )
-    assert plain == salted
-    assert len([r for r in plain if r[0] == 0]) == 3
+    df = spark.createDataFrame(pdf).withColumn("g", F.col("v") % 3)
+    n_id = Counter(pdf["uid"])
+    n_group = Counter(zip(pdf["uid"], pdf["v"] % 3))
 
-    plain_j = sorted(
-        map(tuple, apply_truncation(df, ["uid"], DropExcess(2)).collect())
-    )
-    with config.features.skew_safe_truncation.enabled():
-        salted_j = sorted(
-            map(tuple, apply_truncation(df, ["uid"], DropExcess(2)).collect())
-        )
-    assert plain_j == salted_j
+    def per_key(out, cols):
+        return Counter(tuple(r[c] for c in cols) for r in out.collect())
 
-    plain_u = sorted(
-        map(tuple, apply_truncation(df, ["uid"], DropNonUnique()).collect())
+    kept = per_key(truncate_max_rows_per_id(df, "uid", 3), ["uid"])
+    assert kept == {(u,): min(n, 3) for u, n in n_id.items()}
+
+    kept = per_key(apply_truncation(df, ["uid"], DropExcess(2)), ["uid"])
+    assert kept == {(u,): min(n, 2) for u, n in n_id.items()}
+
+    kept = per_key(apply_truncation(df, ["uid"], DropNonUnique()), ["uid"])
+    assert kept == {(u,): 1 for u in range(1, 200)}
+
+    kept = per_key(
+        truncate_max_rows_per_group_per_id(df, "uid", "g", 2), ["uid", "g"]
     )
-    with config.features.skew_safe_truncation.enabled():
-        salted_u = sorted(
-            map(tuple, apply_truncation(df, ["uid"], DropNonUnique()).collect())
-        )
-    assert plain_u == salted_u
-    assert all(r[0] != 0 for r in plain_u)
+    assert kept == {k: min(n, 2) for k, n in n_group.items()}

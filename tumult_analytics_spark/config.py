@@ -96,13 +96,6 @@ class Config:
         auto_partition_selection = FeatureFlag(
             "Automatic partition selection is experimental", default=False
         )
-        #: Two-phase salted truncation windows + aggregate-based
-        #: DropNonUnique: identical results, bounded task sizes when a
-        #: privacy ID / join key is pathologically hot. Off by default
-        #: (costs one extra bounded shuffle).
-        skew_safe_truncation = FeatureFlag(
-            "Skew-safe two-phase truncation is experimental", default=False
-        )
 
         def __init__(self):
             for k, v in Config.Features.__dict__.items():

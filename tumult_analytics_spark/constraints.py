@@ -7,15 +7,16 @@ Fresh implementation of the semantics at
 and ``truncation_strategy.py`` (DropExcess :38, DropNonUnique :89).
 
 Enforcement is Spark-native and deterministic independent of row order /
-partitioning: rows are ranked by ``xxhash64`` over the full row (a total
-order that does not depend on input order), then truncated with
-``row_number()`` over a window. At 100 TB scale this is a single hash-
-partitioned shuffle per enforcement; skewed IDs are handled by AQE.
+partitioning. MaxRowsPerID, MaxRowsPerGroupPerID and DropExcess share one
+step, ``_keep_first``: rank rows within each key by ``xxhash64`` over the
+full row (a total order that does not depend on input order) and keep the
+first ``n``. That is a single hash-partitioned shuffle per enforcement; hot
+keys are left to AQE. MaxGroupsPerID (dense rank over group hashes) and
+DropNonUnique (count window) keep their own rules.
 """
 
 from __future__ import annotations
 
-import math
 from abc import ABC
 from dataclasses import dataclass
 from typing import List, Optional, Sequence
@@ -92,97 +93,39 @@ def simplify_constraints(constraints: Sequence[Constraint]) -> List[Constraint]:
     return out
 
 
-def _row_order_hash(df: DataFrame):
-    """A deterministic per-row ordering key independent of partitioning.
+def _keep_first(df: DataFrame, key_cols: Sequence[str], n: int) -> DataFrame:
+    """Keep the first ``n`` rows per ``key_cols`` value, ordered by a
+    hash of the full row.
 
-    Hashing the full row (all columns) satisfies the determinism contract of
-    reference truncation_strategy.py:42-45; a monotonically-increasing id or
-    F.rand would not.
+    Hashing all columns satisfies the determinism contract of reference
+    truncation_strategy.py:42-45; a monotonically-increasing id or F.rand
+    would not.
+
+    Scale-critical (round-10 sf100 finding): the hash is materialized as
+    a COLUMN before the window. Ordering the window directly by
+    ``xxhash64(*all_columns)`` makes the Sort evaluate the hash AFTER the
+    exchange, so every input column is required below the sort and
+    Catalyst cannot prune — a 600M-row truncation shuffles the full
+    16-column lineitem row (~150 B) where the downstream query needs 2
+    columns. With the hash projected map-side first, the window orders by
+    one 8-byte column and ColumnPruning trims the exchange to (key, hash,
+    downstream columns) — measured 397 -> 79 s on private_join_count at
+    sf100.
     """
-    return F.xxhash64(*[F.col(c) for c in df.columns])
-
-
-#: Internal column name for the materialized row-order hash.
-_ORDER_COL = "__row_order_h__"
-
-
-def _with_order_hash(df: DataFrame) -> DataFrame:
-    """Materialize the row-order hash as a COLUMN before any window.
-
-    Scale-critical (round-10 sf100 finding): ordering a window directly
-    by ``xxhash64(*all_columns)`` makes the Sort evaluate the hash
-    AFTER the exchange, so every input column is required below the
-    sort and Catalyst cannot prune — a 600M-row truncation shuffles the
-    full 16-column lineitem row (~150 B) where the downstream query
-    needs 2 columns. With the hash projected map-side first, the window
-    orders by one 8-byte column and ColumnPruning trims the exchange to
-    (key, hash, downstream columns) — measured 397 -> 79 s on
-    private_join_count at sf100. Hash value per row is identical, so
-    the selected rows (and the reference determinism contract) are
-    unchanged.
-    """
-    return df.withColumn(_ORDER_COL, _row_order_hash(df))
-
-
-#: Salt bucket count for the skew-safe two-phase truncation.
-_SKEW_SALT_BUCKETS = 64
-
-
-def _two_phase_topk(
-    df: DataFrame, key_cols: Sequence[str], max_rows: int
-) -> DataFrame:
-    """Skew-safe deterministic top-``max_rows`` per key.
-
-    A single window over a hot key puts every row of that key in one
-    task; at 100x scale one key with 10^8 rows stalls the stage. Phase 1
-    splits each key into ``_SKEW_SALT_BUCKETS`` deterministic salt
-    buckets (salt = row hash mod buckets) and keeps max_rows per (key,
-    salt) — bounded partitions; phase 2 re-ranks the survivors
-    (<= buckets * max_rows per key) globally. Selects exactly the same
-    rows as the single-window form: every global hash-minimum is a
-    bucket minimum.
-    """
-    # Hash materialized ONCE map-side (prunable exchanges — see
-    # _with_order_hash) and reused for the salt, both phase orders.
-    hashed = _with_order_hash(df)
-    h = F.col(_ORDER_COL)
-    salted = hashed.withColumn(
-        "__salt__", F.pmod(h, F.lit(_SKEW_SALT_BUCKETS))
+    hashed = df.withColumn(
+        "__row_order_h__", F.xxhash64(*[F.col(c) for c in df.columns])
     )
-    w1 = Window.partitionBy(*key_cols, "__salt__").orderBy(h)
-    p1 = (
-        salted.withColumn("__rn__", F.row_number().over(w1))
-        .filter(F.col("__rn__") <= max_rows)
-        .drop("__rn__", "__salt__")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(h)
+    w = Window.partitionBy(*key_cols).orderBy(F.col("__row_order_h__"))
     return (
-        p1.withColumn("__rn__", F.row_number().over(w2))
-        .filter(F.col("__rn__") <= max_rows)
-        .drop("__rn__", _ORDER_COL)
+        hashed.withColumn("__rn__", F.row_number().over(w))
+        .filter(F.col("__rn__") <= n)
+        .drop("__rn__", "__row_order_h__")
     )
-
-
-def _skew_safe() -> bool:
-    from .config import config
-
-    return bool(config.features.skew_safe_truncation)
 
 
 def truncate_max_rows_per_id(df: DataFrame, id_column: str, max_rows: int) -> DataFrame:
-    """Keep at most ``max_rows`` rows per privacy ID, deterministically.
-
-    With ``config.features.skew_safe_truncation`` enabled, runs the
-    two-phase salted form so a hot ID cannot stall a single task."""
-    if _skew_safe():
-        return _two_phase_topk(df, [id_column], max_rows)
-    hashed = _with_order_hash(df)
-    w = Window.partitionBy(id_column).orderBy(F.col(_ORDER_COL))
-    return (
-        hashed.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") <= max_rows)
-        .drop("__rn__", _ORDER_COL)
-    )
+    """Keep at most ``max_rows`` rows per privacy ID, deterministically."""
+    return _keep_first(df, [id_column], max_rows)
 
 
 def truncate_max_groups_per_id(
@@ -204,15 +147,7 @@ def truncate_max_rows_per_group_per_id(
     df: DataFrame, id_column: str, grouping_column: str, max_rows: int
 ) -> DataFrame:
     """Keep at most ``max_rows`` rows per (ID, group), deterministically."""
-    hashed = _with_order_hash(df)
-    w = Window.partitionBy(id_column, grouping_column).orderBy(
-        F.col(_ORDER_COL)
-    )
-    return (
-        hashed.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") <= max_rows)
-        .drop("__rn__", _ORDER_COL)
-    )
+    return _keep_first(df, [id_column, grouping_column], max_rows)
 
 
 class TruncationStrategy:
@@ -268,42 +203,13 @@ def apply_truncation(
 ) -> DataFrame:
     """Apply a join truncation strategy over the join key columns.
 
-    Skew: with ``config.features.skew_safe_truncation`` enabled,
-    DropExcess uses the two-phase salted top-k and DropNonUnique uses a
-    map-side-combined aggregate + semi-join instead of a count window
-    (partial aggregation shrinks a hot key to one row per input
-    partition before the shuffle). The join itself relies on AQE's
-    skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on by
-    default) — post-truncation each key carries at most
-    ``max_rows``/1 rows per side, so the join fan-out is bounded.
+    Post-truncation each key carries at most ``max_rows``/1 rows per side,
+    so the join fan-out is bounded; a hot key is split by AQE's skew-join
+    (`spark.sql.adaptive.skewJoin.enabled`, on by default).
     """
     if isinstance(strategy, DropExcess):
-        if _skew_safe():
-            return _two_phase_topk(df, join_columns, strategy.max_rows)
-        hashed = _with_order_hash(df)
-        w = Window.partitionBy(*join_columns).orderBy(F.col(_ORDER_COL))
-        return (
-            hashed.withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") <= strategy.max_rows)
-            .drop("__rn__", _ORDER_COL)
-        )
+        return _keep_first(df, join_columns, strategy.max_rows)
     if isinstance(strategy, DropNonUnique):
-        if _skew_safe():
-            from .utils import nullsafe_equi_join
-
-            unique_keys = (
-                df.groupBy(*join_columns)
-                .agg(F.count(F.lit(1)).alias("__cnt__"))
-                .filter(F.col("__cnt__") == 1)
-                .drop("__cnt__")
-            )
-            tmp = {c: f"__uk_{c}" for c in join_columns}
-            uk = unique_keys.withColumnsRenamed(tmp)
-            cond = None
-            for c in join_columns:
-                piece = F.col(c).eqNullSafe(F.col(tmp[c]))
-                cond = piece if cond is None else cond & piece
-            return df.join(uk, on=cond, how="left_semi")
         w = Window.partitionBy(*join_columns)
         return (
             df.withColumn("__cnt__", F.count(F.lit(1)).over(w))

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .schema import ColumnType, Schema, coerce_spark_schema, schema_from_spark
-from .utils import nullsafe_anti_join, nullsafe_equi_join
+from .utils import nullsafe_join
 
 #: Types allowed in KeySet columns (reference keyset/_ops/_utils.py:10).
 KEYSET_COLUMN_TYPES = (ColumnType.INTEGER, ColumnType.DATE, ColumnType.VARCHAR)
@@ -183,7 +183,7 @@ class _Join(_Op):
 
     def to_df(self):
         common = [c for c in self.left.columns() if c in set(self.right.columns())]
-        return nullsafe_equi_join(self.left.to_df(), self.right.to_df(), common)
+        return nullsafe_join(self.left.to_df(), self.right.to_df(), common)
 
 
 @dataclass
@@ -198,8 +198,11 @@ class _Subtract(_Op):
         return self.left.schema()
 
     def to_df(self):
-        return nullsafe_anti_join(
-            self.left.to_df(), self.right.to_df(), list(self.right.columns())
+        return nullsafe_join(
+            self.left.to_df(),
+            self.right.to_df(),
+            self.right.columns(),
+            how="left_anti",
         )
 
 
@@ -664,16 +667,10 @@ class KeySet:
     def dataframe(self) -> DataFrame:
         """Materialize as a deduplicated DataFrame (column order preserved)."""
         if self._materialized is None:
-            df = self._op.to_df()
-            # Sources and local products are pre-deduplicated; DataFrame
-            # sources and compound ops dedup in to_df(). A final safety
-            # dropDuplicates is avoided when the op guarantees distinctness.
-            if isinstance(self._op, (_Join, _CrossJoin, _Subtract, _Filter)):
-                # joins of distinct inputs on all common columns stay
-                # distinct, cross products of distinct inputs are distinct,
-                # anti-join/filter of distinct input is distinct.
-                pass
-            self._materialized = df
+            # Every op yields distinct rows: sources, unions and projections
+            # dedup in to_df(); joins, cross products, anti-joins and
+            # filters of distinct inputs stay distinct.
+            self._materialized = self._op.to_df()
         return self._materialized
 
     def local_rows(self) -> Optional[List[Tuple]]:

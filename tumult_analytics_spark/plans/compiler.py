@@ -68,7 +68,7 @@ from ..schema import (
     Schema,
     schema_from_spark,
 )
-from ..utils import disambiguate_columns, nullsafe_equi_join
+from ..utils import nullsafe_join, spread_rows
 from . import expr as E
 
 # ---------------------------------------------------------------------------
@@ -177,20 +177,6 @@ def _restrict_schema(schema: Schema, keep) -> Schema:
         id_column=schema.id_column if schema.id_column in keep else None,
         id_space=schema.id_space if schema.id_column in keep else None,
     )
-
-
-def _spread_rows(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the input is a few-file scan (shared
-    helper in utils). Row-dict UDFs cost ~10us+/row of Python; a
-    single-file parquet scan would serialize the whole stage on a few
-    cores, so the one-off shuffle pays for itself above ~50k rows. Not
-    applied to vectorized (numpy-batch) map/flat_map kernels, where
-    per-row cost is small enough that the added AQE stage outweighs the
-    parallelism.
-    """
-    from ..utils import spread_rows
-
-    return spread_rows(df)
 
 
 class _BatchCols:
@@ -389,7 +375,11 @@ def compile_map(
     length/order. Skips the per-row dict conversion entirely.
     """
     if not vectorized:
-        df = _spread_rows(df)
+        # Row-dict UDFs cost ~10us+/row of Python, so a few-file scan is
+        # spread over the cores first. Vectorized kernels skip it: their
+        # per-row cost is small enough that the added AQE stage outweighs
+        # the parallelism.
+        df = spread_rows(df)
     out_schema = _restrict_schema(out_schema, keep)
     spark_schema = _spark_schema_for(out_schema)
     out_cols = list(out_schema.columns)
@@ -457,7 +447,7 @@ def compile_flat_map(
     the user function honoring its contract.
     """
     if not vectorized:
-        df = _spread_rows(df)
+        df = spread_rows(df)  # as in compile_map
     out_schema = _restrict_schema(out_schema, keep)
     spark_schema = _spark_schema_for(out_schema)
     out_cols = list(out_schema.columns)
@@ -1028,8 +1018,7 @@ def _compile_join_public(expr: E.JoinPublic, ctx: CompileContext) -> CompiledTab
         if expr.join_columns
         else [c for c in t.df.columns if c in set(pub.columns)]
     )
-    left, right, _ = disambiguate_columns(t.df, pub, join_cols)
-    df = nullsafe_equi_join(left, right, join_cols, how=expr.how)
+    df = nullsafe_join(t.df, pub, join_cols, how=expr.how)
     df = df.select(*[c for c in schema.columns if c in df.columns])
     # Stability multiplies by the max multiplicity of the join key in the
     # public table (reference _constraint_propagation.py:199-210). This is
@@ -1084,8 +1073,7 @@ def _compile_join_private(expr: E.JoinPrivate, ctx: CompileContext) -> CompiledT
             )
         if lt.schema.id_column not in join_cols:
             raise ValueError("ID tables must join on their ID column")
-        left, right, _ = disambiguate_columns(lt.df, rt.df, join_cols)
-        df = nullsafe_equi_join(left, right, join_cols, how="inner")
+        df = nullsafe_join(lt.df, rt.df, join_cols)
         df = df.select(*[c for c in schema.columns if c in df.columns])
         # Constraint product: each changed ID still has bounded rows if both
         # sides were bounded (reference _constraint_propagation.py:112-189).
@@ -1102,10 +1090,11 @@ def _compile_join_private(expr: E.JoinPrivate, ctx: CompileContext) -> CompiledT
     ls, rs = expr.truncation_strategy_left, expr.truncation_strategy_right
     if ls is None or rs is None:
         raise ValueError("When joining without IDs, truncation strategies are required")
-    left_df = apply_truncation(lt.df, join_cols, ls)
-    right_df = apply_truncation(rt.df, join_cols, rs)
-    left, right, _ = disambiguate_columns(left_df, right_df, join_cols)
-    df = nullsafe_equi_join(left, right, join_cols, how="inner")
+    df = nullsafe_join(
+        apply_truncation(lt.df, join_cols, ls),
+        apply_truncation(rt.df, join_cols, rs),
+        join_cols,
+    )
     df = df.select(*[c for c in schema.columns if c in df.columns])
     l1 = join_truncation_stability(ls, rs, lt.l1, rt.l1)
     l2 = join_truncation_stability(ls, rs, lt.l2, rt.l2)
@@ -1287,17 +1276,11 @@ def _keyset_filter(df: DataFrame, keys: KeySet) -> DataFrame:
     est = keys.estimated_size()
     if est is not None and est > KEYSET_BROADCAST_LIMIT:
         return df
-    kdf = keys.dataframe()
-    if est is not None:
-        kdf = F.broadcast(kdf)
-    # unknown size (DataFrame-backed keyset): plain semi-join, AQE decides.
-    tmp = {c: f"__ks_{c}" for c in cols}
-    k = kdf.withColumnsRenamed(tmp)
-    cond = None
-    for c in cols:
-        piece = F.col(c).eqNullSafe(F.col(tmp[c]))
-        cond = piece if cond is None else cond & piece
-    return df.join(k, on=cond, how="left_semi")
+    # Broadcast when the size is known; an unknown size (DataFrame-backed
+    # keyset) gets a plain semi-join and AQE decides.
+    return nullsafe_join(
+        df, keys.dataframe(), cols, how="left_semi", broadcast=est is not None
+    )
 
 
 def _keyset_attach(
@@ -1310,18 +1293,22 @@ def _keyset_attach(
     (noisy zeros for missing groups, per reference semantics:
     noise-after-join, not noise-then-join). For huge or unknown-size
     keysets this is a shuffled join and AQE picks the runtime strategy.
+    ``fill`` also applies with no group columns: a global sum over no rows
+    is null.
     """
     cols = list(keys.columns())
-    if not cols:
-        return agg
-    kdf = keys.dataframe()
-    joined = nullsafe_equi_join(
-        kdf, agg, cols, how="left", broadcast_right=_keyset_broadcastable(keys)
-    )
+    if cols:
+        agg = nullsafe_join(
+            keys.dataframe(),
+            agg,
+            cols,
+            how="left",
+            broadcast=_keyset_broadcastable(keys),
+        )
     fills = {
         c: F.coalesce(F.col(c), F.lit(v)) for c, v in fill.items() if v is not None
     }
-    return joined.withColumns(fills) if fills else joined
+    return agg.withColumns(fills) if fills else agg
 
 
 def _clamp(col: F.Column, ctype: ColumnType, low, high) -> F.Column:
@@ -1482,7 +1469,6 @@ def _compile_sum(
     agg = _groupby(df, gcols).agg(F.sum(clamped).alias(out))
     zero: Any = 0 if integer_valued else 0.0
     res = _keyset_attach(agg, keys, {out: zero})
-    res = res.withColumn(out, F.coalesce(F.col(out), F.lit(zero)))
     sens = max(abs(float(expr.low)), abs(float(expr.high)))
     mech = resolve_mechanism(expr.mechanism, bspec, integer_valued)
     return MeasurementResult(
@@ -1517,7 +1503,6 @@ def _compile_moments(expr, ctx: CompileContext, bspec: BudgetSpec) -> Measuremen
     agg = _groupby(df, gcols).agg(*[a.alias(c) for c, (a, _, _) in sums.items()])
     zeros = {c: z for c, (_, z, _) in sums.items()}
     res = _keyset_attach(agg, keys, zeros)
-    res = res.withColumns({c: F.coalesce(F.col(c), F.lit(z)) for c, z in zeros.items()})
     part = bspec.split(len(sums))
     noise = []
     for c, (_, _, d) in sums.items():
@@ -1748,11 +1733,7 @@ def _compile_get_bounds(
     """DP clamping-bound estimate via a noisy histogram over power-of-two
     magnitude bins; returns the smallest +-2^k covering ~95% of rows
     (reference behavior: +-128 for data 0..99)."""
-    t = compile_transform(expr.child, ctx)
-    keys = expr.groupby_keys
-    gcols = list(keys.columns())
-    df, l1, l2 = _truncate_for_measurement(t, gcols, bspec.kind)
-    df = _keyset_filter(df, keys)
+    t, df, gcols, keys, l1, l2 = _prep(expr, ctx, bspec)
     m = F.col(expr.measure_column).cast("double")
     # bin = ceil(log2(|x|)) for |x| > 1, else 0; sign-agnostic magnitude bin.
     mag = F.abs(m)

@@ -1,78 +1,62 @@
-"""Shared Spark helpers: null-safe equi-joins and column disambiguation.
+"""Shared Spark helpers; chief among them the one null-safe join builder.
 
 The reference joins with ``join_on_nulls=True`` everywhere
 (`_base_transformation_visitor.py:877, 899, 968, 985`), i.e. null join keys
-match each other. Spark expresses this with ``<=>`` (EqualNullSafe), which
-still qualifies as a hash-join key, so broadcast/sort-merge strategies and
-AQE all still apply — no performance cliff vs plain ``=``.
+match each other. :func:`nullsafe_join` is the only place in the package
+that builds that condition: one SQL expression of ``<=>`` (EqualNullSafe)
+over every key column. ``<=>`` still qualifies as a hash-join key, so
+broadcast/sort-merge strategies and AQE all still apply — no performance
+cliff vs plain ``=``. KeySet join/subtract, the compiler's keyset filter
+and attach, and the public and private table joins all go through it.
 """
 
 from __future__ import annotations
 
 import contextlib as _contextlib
 import os
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def nullsafe_equi_join(
+def nullsafe_join(
     left: DataFrame,
     right: DataFrame,
-    join_columns: Sequence[str],
+    on: Sequence[str],
     how: str = "inner",
-    broadcast_right: bool = False,
+    broadcast: bool = False,
 ) -> DataFrame:
-    """Join on ``join_columns`` with null-safe equality.
+    """Join ``left`` and ``right`` on ``on`` with null-safe equality.
 
-    Output columns: join columns (taken from the left side), then left
-    non-key columns, then right non-key columns. Shared non-key columns must
-    have been disambiguated by the caller.
+    ``how`` is one of ``inner``, ``left``, ``left_semi``, ``left_anti``;
+    ``broadcast`` hints the right side. Output columns: the left columns
+    in their own order (key values taken from the left side), then, for
+    ``inner``/``left``, the right non-key columns. Non-key columns present
+    on both sides come out as ``{name}_left`` / ``{name}_right`` (reference
+    JoinPublic semantics, _query_expr.py:1000-1012).
     """
-    if not join_columns:
-        raise ValueError("join_columns must be non-empty")
-    # Rename right join keys to temporaries so the condition is unambiguous.
-    tmp = {c: f"__join_r_{c}" for c in join_columns}
-    r = right.withColumnsRenamed(tmp)
-    if broadcast_right:
+    keys = list(on)
+    if not keys:
+        raise ValueError("join columns must be non-empty")
+    if how not in ("inner", "left", "left_semi", "left_anti"):
+        raise ValueError(f"unsupported join type: {how!r}")
+    # Right keys get temporary names so the condition is unambiguous even
+    # when both sides descend from the same DataFrame.
+    tmp = {c: f"__join_r_{c}" for c in keys}
+    shared = (
+        set()
+        if how in ("left_semi", "left_anti")
+        else (set(left.columns) & set(right.columns)) - set(keys)
+    )
+    if shared:
+        left = left.withColumnsRenamed({c: f"{c}_left" for c in shared})
+    r = right.withColumnsRenamed({**tmp, **{c: f"{c}_right" for c in shared}})
+    if broadcast:
         r = F.broadcast(r)
-    cond = None
-    for c in join_columns:
-        piece = F.col(c).eqNullSafe(F.col(tmp[c]))
-        cond = piece if cond is None else cond & piece
-    joined = left.join(r, on=cond, how=how)
-    return joined.drop(*tmp.values())
-
-
-def nullsafe_anti_join(
-    left: DataFrame, right: DataFrame, join_columns: Sequence[str]
-) -> DataFrame:
-    """Left anti-join with null-safe equality on ``join_columns``."""
-    tmp = {c: f"__join_r_{c}" for c in join_columns}
-    r = right.withColumnsRenamed(tmp)
-    cond = None
-    for c in join_columns:
-        piece = F.col(c).eqNullSafe(F.col(tmp[c]))
-        cond = piece if cond is None else cond & piece
-    return left.join(r, on=cond, how="left_anti")
-
-
-def disambiguate_columns(
-    left: DataFrame,
-    right: DataFrame,
-    join_columns: Sequence[str],
-) -> tuple:
-    """Rename shared non-key columns to ``{name}_left`` / ``{name}_right``
-    (reference JoinPublic semantics, _query_expr.py:1000-1012)."""
-    shared = [
-        c
-        for c in left.columns
-        if c in set(right.columns) and c not in set(join_columns)
-    ]
-    lren = {c: f"{c}_left" for c in shared}
-    rren = {c: f"{c}_right" for c in shared}
-    return left.withColumnsRenamed(lren), right.withColumnsRenamed(rren), shared
+    quote = lambda c: "`" + c.replace("`", "``") + "`"  # noqa: E731
+    cond = " AND ".join(f"{quote(c)} <=> {quote(tmp[c])}" for c in keys)
+    return left.join(r, on=F.expr(cond), how=how).drop(*tmp.values())
 
 
 def event_time(df: DataFrame, col: str = "ts") -> "F.Column":
@@ -137,39 +121,6 @@ def check_installation() -> None:
     s = Session.from_dataframe(PureDPBudget(1), "check", df, AddOneRow())
     out = s.evaluate(QueryBuilder("check").count(), PureDPBudget(1))
     assert out.count() == 1
-
-
-def salted_join(
-    left: "DataFrame",
-    right: "DataFrame",
-    join_columns: Sequence[str],
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> "DataFrame":
-    """Skew-resistant equi-join: salt the (skewed) left side into
-    ``salt_buckets`` sub-keys and replicate the right side across every
-    bucket, so one hot key spreads over ``salt_buckets`` tasks instead of
-    stalling a single reducer.
-
-    AQE's skew-join handles most cases at runtime; use this when a key is
-    so hot that even split shuffle blocks overwhelm one executor (the
-    classic power-law join at 100 TB), or when AQE is unavailable
-    (streaming joins). Replication costs ``salt_buckets`` copies of the
-    right side's shuffle — keep the smaller table on the right.
-    """
-    cols = list(join_columns)
-    salted_left = left.withColumn(
-        "__salt__", (F.rand(seed=0) * salt_buckets).cast("int")
-    )
-    salted_right = right.join(
-        F.broadcast(
-            left.sparkSession.range(salt_buckets).select(
-                F.col("id").cast("int").alias("__salt__")
-            )
-        )
-    )
-    out = salted_left.join(salted_right, on=cols + ["__salt__"], how=how)
-    return out.drop("__salt__")
 
 
 def spread_rows(
