@@ -216,3 +216,20 @@ def test_semantic_dedup_bad_method(spark):
     df = _mkdf(spark, np.eye(4))
     with pytest.raises(ValueError, match="method"):
         semantic_dedup(df, method="fuzzy")
+
+
+@pytest.mark.parametrize("method", ["exact", "lsh"])
+def test_semantic_dedup_infers_eval_type(spark, method):
+    """The per-cluster kernel is fully type-hinted, so ``applyInPandas``
+    infers its eval type instead of warning on every call."""
+    import warnings
+
+    from tumult_analytics_spark.operators.clustering import semantic_dedup
+
+    df = _mkdf(spark, np.eye(4))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        semantic_dedup(df, k=2, n_iter=1, threshold=0.5, method=method)
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]

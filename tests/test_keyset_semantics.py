@@ -129,6 +129,9 @@ def test_empty_keyset_is_global_group(spark):
     ks = KeySet.from_dict({})
     assert ks.columns() == ()
     assert ks.is_empty()
+    # The single global group: one row of no columns.
+    df = ks.dataframe()
+    assert df.columns == [] and df.count() == 1
 
 
 def test_is_equivalent_cheap_paths(spark):

@@ -72,8 +72,11 @@ FULL_SWEEP = bool(
 )
 #: keys whose code changed recently but which the stride may miss: the
 #: default suite grades them too, so a change is always checked against
-#: its own oracles. Here: the 34 DP-core keys, every one of which
-#: aggregates through the keyset filter / attach joins.
+#: its own oracles. Here: the 34 DP-core keys, whose keysets and
+#: released answers are driver-side local relations, plus the operator
+#: keys that build a driver-side frame (trainer histories, BPE merges,
+#: BM25 query terms, provenance funnels, shard and WARC manifests,
+#: re-materialized confusion tables).
 TOUCHED_KEYS = [
     "count_filter",
     "groupby_count_keyset",
@@ -109,6 +112,28 @@ TOUCHED_KEYS = [
     "view_count",
     "partition_split_count",
     "auto_partition_count",
+    "archive_fs_roundtrip_stats",
+    "bm25_topk",
+    "bpe_fertility",
+    "bpe_merges",
+    "bpe_tokenized_stats",
+    "crawl_funnel_stats",
+    "crawl_prep_stats",
+    "language_id_confusion",
+    "language_id_holdout_confusion",
+    "language_id_production_holdout",
+    "language_train_stats",
+    "pipeline_provenance_stats",
+    "quality_holdout_eval",
+    "quality_train_stats",
+    "streaming_sessionize_stats",
+    "streaming_warc_ingest",
+    "streaming_wet_publish",
+    "warc_http_framing_stats",
+    "warc_ingest_stats",
+    "wat_roundtrip_stats",
+    "webdataset_export_stats",
+    "wet_roundtrip_stats",
 ]
 SELECTED = (
     QUERIES

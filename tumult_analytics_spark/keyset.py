@@ -13,7 +13,16 @@ Fresh implementation of the algebra documented at
 - Small cross products (estimated <= 2**20 rows) are computed driver-side
   instead of a Spark crossJoin (keyset/_ops/_rules.py:23, 282-349) — at
   scale the keyset is the *broadcast* side of the aggregation join, so
-  keeping it driver-resident when tiny avoids pointless Spark jobs.
+  keeping it driver-resident when tiny avoids pointless Spark jobs. Its
+  frame is built column-wise in Arrow (each factor column repeated or
+  tiled), with no tuple per output row.
+- Driver-side rows (literal sources, local products, released keys) become
+  an Arrow-backed ``LocalRelation`` through :func:`utils.local_frame`. A
+  release scans its keyset twice (the keyset-filter semi-join and the
+  attach join); built with ``createDataFrame(list, schema)`` instead, the
+  keyset would be a ``LogicalRDD`` over a PythonRDD (PySpark re-serializes
+  ``sc.parallelize`` through an identity ``map``), and each scan would
+  start Python workers.
 
 Spark mapping: crossJoin / null-safe join / left_anti / unionByName+distinct
 / select+dropDuplicates / filter. Catalyst handles ordering; we keep the
@@ -34,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .schema import ColumnType, Schema, coerce_spark_schema, schema_from_spark
-from .utils import nullsafe_join
+from .utils import arrow_columns, local_frame, nullsafe_join
 
 #: Types allowed in KeySet columns (reference keyset/_ops/_utils.py:10).
 KEYSET_COLUMN_TYPES = (ColumnType.INTEGER, ColumnType.DATE, ColumnType.VARCHAR)
@@ -48,6 +57,14 @@ _SPARK_T = {
     ColumnType.DATE: T.DateType(),
     ColumnType.VARCHAR: T.StringType(),
 }
+
+
+def _struct(op: "_Op") -> T.StructType:
+    """Spark schema of an op's columns, in column order."""
+    types = op.schema()
+    return T.StructType(
+        [T.StructField(c, _SPARK_T[types[c]], True) for c in op.columns()]
+    )
 
 
 def _py_keyset_type(v: Any) -> ColumnType:
@@ -92,6 +109,14 @@ class _Op(ABC):
         """Rows if this subtree is materializable driver-side, else None."""
         return None
 
+    def local_columns(self) -> Optional[Tuple[int, list]]:
+        """``(row count, one Arrow array per column)`` of
+        :meth:`local_rows`, else None."""
+        rows = self.local_rows()
+        if rows is None:
+            return None
+        return len(rows), arrow_columns(rows, _struct(self))
+
     @abstractmethod
     def to_df(self) -> DataFrame:
         ...
@@ -116,8 +141,7 @@ class _FromTuples(_Op):
         return list(self.rows)
 
     def to_df(self):
-        fields = [T.StructField(c, _SPARK_T[self.types[c]], True) for c in self.cols]
-        return _spark().createDataFrame(list(self.rows), T.StructType(fields))
+        return local_frame(_spark(), self.rows, _struct(self))
 
 
 @dataclass
@@ -159,14 +183,33 @@ class _CrossJoin(_Op):
             return None
         return [a + b for a, b in itertools.product(l, r)]
 
+    def local_columns(self):
+        # Column-wise product, in local_rows order: each left column
+        # repeated and each right column tiled by the other side's length,
+        # so no tuple per output row is built.
+        est = self.estimated_size()
+        if est is None or est > IN_MEMORY_CROSSJOIN_LIMIT:
+            return None
+        l, r = self.left.local_columns(), self.right.local_columns()
+        if l is None or r is None:
+            return None
+        import numpy as np
+
+        (nl, lcols), (nr, rcols) = l, r
+        li, ri = np.repeat(np.arange(nl), nr), np.tile(np.arange(nr), nl)
+        return nl * nr, [c.take(li) for c in lcols] + [c.take(ri) for c in rcols]
+
     def to_df(self):
-        rows = self.local_rows()
-        if rows is not None:
-            fields = [
-                T.StructField(c, _SPARK_T[t], True) for c, t in self.schema().items()
-            ]
-            return _spark().createDataFrame(rows, T.StructType(fields))
-        return self.left.to_df().crossJoin(self.right.to_df())
+        local = self.local_columns()
+        if local is None:
+            return self.left.to_df().crossJoin(self.right.to_df())
+        n, columns = local
+        if not columns:  # a product of column-less factors
+            return local_frame(_spark(), [()] * n, _struct(self))
+        import pyarrow as pa
+
+        table = pa.Table.from_arrays(columns, names=list(self.columns()))
+        return local_frame(_spark(), table, _struct(self))
 
 
 @dataclass

@@ -268,7 +268,7 @@ def semantic_dedup(
 
     cap = int(max_cluster_rows)
 
-    def dropped_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def dropped_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) > cap:
             raise ValueError(
                 f"semantic_dedup: cluster {key[0]} has {len(pdf)} rows "
@@ -340,7 +340,7 @@ def _semantic_dedup_lsh(
     )
     keyed = _melt_tables(prepped, id_col, int(tables), carry=(cluster_col,))
 
-    def dropped_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def dropped_fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) > cap:
             raise ValueError(
                 f"semantic_dedup(lsh): bucket group {key} has "

@@ -14,6 +14,7 @@ from . import dedup as D
 from . import pipeline as P
 from . import similarity as S
 from . import text as X
+from ..utils import local_frame
 
 
 #: (SparkSession id, sf_dir, table) -> DataFrame. Immutable logical plans;
@@ -2159,7 +2160,7 @@ def q_crawl_prep_stats(spark, sf_dir):
             F.sum("nt").cast("long").alias("sum_tokens"),
             F.sum("n_kept_lines").cast("long").alias("sum_kept_lines"),
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = local_frame(spark, out.toArrow(), out.schema)
     finally:
         cleaned.unpersist()
     return out
@@ -2548,7 +2549,7 @@ def q_language_id_confusion(spark, sf_dir):
         out = served.groupBy("lang_true", "lang_pred").agg(
             F.count(F.lit(1)).alias("n")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = local_frame(spark, out.toArrow(), out.schema)
     finally:
         with_vec.unpersist()
     return out
@@ -2631,7 +2632,7 @@ def q_language_id_holdout_confusion(spark, sf_dir):
         out = served.groupBy("lang_true", "lang_pred").agg(
             F.count(F.lit(1)).alias("n")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = local_frame(spark, out.toArrow(), out.schema)
     finally:
         with_vec.unpersist()
     return out
@@ -2710,7 +2711,7 @@ def q_language_id_production_holdout(spark, sf_dir):
         out = served.groupBy("lang_true", "lang_pred").agg(
             F.count(F.lit(1)).alias("n")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = local_frame(spark, out.toArrow(), out.schema)
     finally:
         with_vec.unpersist()
     return out
@@ -5963,7 +5964,8 @@ def q_streaming_sessionize_stats(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="tas_stream_sess_")
     stage = os.path.join(tmp, "events")
     os.makedirs(stage)
-    sentinel = spark.createDataFrame(
+    sentinel = local_frame(
+        spark,
         [(999_999_999, "2035-01-01 00:00:00", 0.0)],
         "user_id long, event_time string, value double",
     ).select(

@@ -33,6 +33,8 @@ from typing import Dict, Mapping, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils import local_frame
+
 __all__ = [
     "ngram_repetition",
     "gopher_quality_flags",
@@ -926,8 +928,8 @@ def read_webdataset_manifest(
                 + [f"{e}_bytes" for e in exts],
             )
 
-    files = spark.createDataFrame(
-        [(p,) for p in shard_paths], "path string"
+    files = local_frame(
+        spark, [(p,) for p in shard_paths], "path string"
     ).repartition(max(len(shard_paths), 1))
     return files.mapInPandas(_parse, schema)
 

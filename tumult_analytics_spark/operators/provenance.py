@@ -23,6 +23,8 @@ from typing import List
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils import local_frame
+
 __all__ = [
     "mark_stage",
     "mark_duplicates",
@@ -142,7 +144,8 @@ def provenance_funnel(
         (i, stage_names[i], int(row[f"d{i}"]), int(row[f"r{i}"]))
         for i in range(k)
     ]
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "stage int, stage_name string, n_dropped_here long, "
         "n_remaining long",

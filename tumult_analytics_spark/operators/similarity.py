@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..utils import spread_rows
+from ..utils import local_frame, spread_rows
 
 #: Default ceiling for driver-side collects in the brute-force paths.
 #: They are exact oracles, O(|corpus|) driver memory — refuse beyond this.
@@ -513,8 +513,8 @@ class AnnIndex:
         self.df.write.mode("overwrite").parquet(f"{path}/data")
         spark = self.df.sparkSession
         meta = {"kind": self.kind, "params": self.params}
-        spark.createDataFrame(
-            [(json.dumps(meta),)], "meta string"
+        local_frame(
+            spark, [(json.dumps(meta),)], "meta string"
         ).coalesce(1).write.mode("overwrite").text(f"{path}/meta")
 
     @classmethod
@@ -585,7 +585,8 @@ class AnnIndex:
             if not isinstance(deleted_ids, DataFrame):
                 spark = df.sparkSession
                 field = df.schema[id_col]
-                deleted_ids = spark.createDataFrame(
+                deleted_ids = local_frame(
+                    spark,
                     [(v,) for v in deleted_ids],
                     T.StructType([T.StructField(id_col, field.dataType, True)]),
                 )

@@ -9,6 +9,8 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils import local_frame
+
 #: Tiny per-language stopword lists for the n-gram-free language heuristic.
 STOPWORDS: Dict[str, List[str]] = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "for", "was"],
@@ -307,8 +309,9 @@ def bpe_learn_merges(
             ),
         )
 
-    merges_df = spark.createDataFrame(
-        merges, "step int, left string, right string, merged string, pair_count long"
+    merges_df = local_frame(
+        spark, merges,
+        "step int, left string, right string, merged string, pair_count long",
     )
     if return_words:
         return merges_df, words
@@ -830,7 +833,8 @@ def language_train_logreg(
         + ", ".join(f"w{j} double" for j in range(dim))
         + ", mse double"
     )
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(step, classes[c], b, *w, mse) for step, c, b, w, mse in hist],
         schema,
     )
@@ -1038,7 +1042,8 @@ def language_train_logreg_vec(
                 )
     finally:
         data.unpersist()
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "step int, class string, bias double, w array<double>, "
         "mse double",
@@ -1907,7 +1912,8 @@ def quality_train_logreg(
         data, [float(init[0])], [[float(v) for v in init[1:4]]],
         steps, lr, "quality_train_logreg",
     )
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(step, b, *w, mse) for step, _, b, w, mse in hist],
         "step int, bias double, w_tokens double, w_mean_tok double, "
         "w_punct double, mse double",
@@ -2150,7 +2156,7 @@ def bm25_topk(
         F.count(F.lit(1)).alias("df")
     )
     qterms = F.broadcast(
-        spark.createDataFrame(qrows, "query_id string, __term__ string")
+        local_frame(spark, qrows, "query_id string, __term__ string")
     )
     idf = F.log(
         F.lit(1.0)

@@ -68,7 +68,7 @@ from ..schema import (
     Schema,
     schema_from_spark,
 )
-from ..utils import nullsafe_join, spread_rows
+from ..utils import local_frame, nullsafe_join, spread_rows
 from . import expr as E
 
 # ---------------------------------------------------------------------------
@@ -1361,8 +1361,8 @@ class MeasurementResult:
         if table.num_rows > cap:
             noisy = add_noise_batches(self.df, specs)
             return self.finish(noisy).localCheckpoint(eager=True)
-        local = self.df.sparkSession.createDataFrame(
-            add_noise(table, specs, _rng()), schema=self.df.schema
+        local = local_frame(
+            self.df.sparkSession, add_noise(table, specs, _rng()), self.df.schema
         )
         return self.finish(local)
 
@@ -1664,10 +1664,12 @@ def _compile_quantiles(
 def _per_group(counts, gcols, kernel, out_schema, keys: KeySet) -> DataFrame:
     """``kernel(key, pdf)`` -> one answer row per group of ``counts``: one
     ``applyInPandas`` attached to the keyset, or, with no group columns, a
-    driver-side call whose answer is plain data."""
+    driver-side call whose answer is a local relation."""
     if not gcols:
         pdf = kernel((), counts.toPandas())
-        return counts.sparkSession.createDataFrame(pdf, out_schema)
+        return local_frame(
+            counts.sparkSession, pdf.itertuples(index=False, name=None), out_schema
+        )
     per_group = counts.groupBy(*gcols).applyInPandas(kernel, out_schema)
     return _keyset_attach(per_group, keys, {})
 

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fs as xfs
+from ..utils import local_frame
 
 __all__ = [
     "write_warc", "write_wet", "write_wat", "read_warc",
@@ -256,8 +257,7 @@ def write_warc(
     # the lazy applyInPandas plan would re-execute _write_shard (and
     # rewrite every shard file) on any caller action, letting on-disk
     # bytes and the returned manifest diverge mid-read.
-    rows = manifest.collect()
-    return df.sparkSession.createDataFrame(rows, manifest.schema)
+    return local_frame(df.sparkSession, manifest.toArrow(), manifest.schema)
 
 
 def _sidecar_record_bytes(
@@ -360,8 +360,7 @@ def _write_sidecar(
     manifest = staged.groupBy("shard").applyInPandas(
         _write_shard, "shard int, n_records long, payload_bytes long"
     )
-    rows = manifest.collect()
-    return df.sparkSession.createDataFrame(rows, manifest.schema)
+    return local_frame(df.sparkSession, manifest.toArrow(), manifest.schema)
 
 
 def write_wet(
@@ -747,8 +746,8 @@ def read_warc(
             f"no *.warc / *.warc.gz / *.wet.gz files under {path!r}"
         )
     _parse = _make_parser(record_types, batch_rows)
-    paths_df = spark.createDataFrame(
-        [(p,) for p in files], "path string"
+    paths_df = local_frame(
+        spark, [(p,) for p in files], "path string"
     ).repartition(len(files))
     return paths_df.mapInPandas(_parse, _READ_SCHEMA)
 
