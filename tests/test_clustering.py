@@ -76,16 +76,18 @@ def test_validation(spark):
         kmeans_fit_predict(df, k=5, n_iter=1)
 
 
-def test_driver_state_is_only_centroids(spark):
-    # The iteration loop must collect exactly k rows per round (the
-    # centroid update) — never the assignments. Guard via the agg shape:
-    # the grouped update frame has k rows max regardless of data size.
+def test_driver_state_is_only_centroids(spark, monkeypatch):
+    # Above the driver cap only the centroids reach the driver: each
+    # iteration collects k x (dim + 1) partial sums per partition, never
+    # the assignments, and the result stays a lazy distributed frame.
+    from tumult_analytics_spark import utils
+
+    monkeypatch.setattr(utils, "DRIVER_LOOP_BYTES", 0)
     rng = np.random.default_rng(1)
     df = _mkdf(spark, rng.normal(size=(200, 4)))
     out, centroids = kmeans_fit_predict(df, k=3, n_iter=2)
     assert centroids.shape == (3, 4)
-    # result stays a lazy distributed frame (no driver materialization)
-    assert out.rdd is not None
+    assert "MapInArrow" in out._jdf.queryExecution().executedPlan().toString()
     assert out.count() == 200
 
 

@@ -73,10 +73,12 @@ FULL_SWEEP = bool(
 #: keys whose code changed recently but which the stride may miss: the
 #: default suite grades them too, so a change is always checked against
 #: its own oracles. Here: the 34 DP-core keys, whose keysets and
-#: released answers are driver-side local relations, plus the operator
-#: keys that build a driver-side frame (trainer histories, BPE merges,
-#: BM25 query terms, provenance funnels, shard and WARC manifests,
-#: re-materialized confusion tables).
+#: released answers are driver-side local relations; the operator keys
+#: that build a driver-side frame (trainer histories, BPE merges, BM25
+#: query terms, provenance funnels, shard and WARC manifests,
+#: re-materialized confusion tables); and every key whose query function
+#: reaches the iterative operators (k-means, BPE, the GD trainer) in a
+#: call-graph walk from the ``q_`` functions.
 TOUCHED_KEYS = [
     "count_filter",
     "groupby_count_keyset",
@@ -134,6 +136,8 @@ TOUCHED_KEYS = [
     "wat_roundtrip_stats",
     "webdataset_export_stats",
     "wet_roundtrip_stats",
+    "kmeans_cluster_stats",
+    "semantic_dedup_stats",
 ]
 SELECTED = (
     QUERIES

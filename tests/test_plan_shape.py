@@ -711,35 +711,45 @@ def test_bm25_query_terms_are_broadcast(spark):
     assert "rangepartitioning" not in plan.lower()  # no global sort
 
 
-def test_gd_trainer_step_is_one_partial_aggregation(spark, monkeypatch):
-    # Each step of the shared GD trainer, for both of its featurizers,
-    # is one map-side-combined aggregation over the cached training
-    # frame: partial_avg (combiner state) so the exchange moves
-    # K*(dim+2) doubles per partition, never rows; weights embed as
-    # literals, so there is no broadcast join and no row shuffle.
+def test_iterative_steps_above_cap_are_one_map_in_arrow_pass(spark, monkeypatch):
+    # Above the driver cap, each step of the GD trainer (both
+    # featurizers), of k-means and of BPE is one mapInArrow pass whose
+    # partitions emit partial sums: the state ships in the task closure,
+    # so there is no broadcast join, and rows never hash-shuffle.
     from pyspark.sql import functions as F
 
+    from tumult_analytics_spark import utils
+    from tumult_analytics_spark.operators import clustering as C
     from tumult_analytics_spark.operators import text as X
 
-    plans = []
-    real_step = X._gd_step
-
-    def spy(data, b, w):
-        step = real_step(data, b, w)
-        plans.append(_plan(step))
-        return step
-
-    monkeypatch.setattr(X, "_gd_step", spy)
+    monkeypatch.setattr(utils, "DRIVER_LOOP_BYTES", 0)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plans = []
+    real = type(docs).mapInArrow
+
+    def spy(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        plans.append(_plan(out))
+        return out
+
+    monkeypatch.setattr(type(docs), "mapInArrow", spy)
     X.quality_train_logreg(
         docs.withColumn("label", (F.length("text") > 400).cast("double")),
-        "text", "label", steps=1,
+        "text", "label", steps=2,
     )
-    X.language_train_logreg(docs, "text", "lang", ["en", "zh"], dim=4, steps=1)
-    assert len(plans) == 2
+    X.language_train_logreg(docs, "text", "lang", ["en", "zh"], dim=4, steps=2)
+    X.language_train_logreg_vec(
+        docs, "text", "lang", ["en", "zh"], dim=4, steps=2
+    )
+    assert len(plans) == 6
+    C.kmeans_fit_predict(
+        spark.read.parquet(f"{SF}/embeddings.parquet"), k=2, n_iter=2
+    )
+    assert len(plans) == 9  # two steps and the final assignment
+    X.bpe_learn_merges(docs, "text", num_merges=2)
+    assert len(plans) == 11
     for plan in plans:
-        assert "partial_avg" in plan
-        assert "InMemoryTableScan" in plan
+        assert plan.count("MapInArrow") == 1
         assert "Exchange hashpartitioning" not in plan
         assert "Broadcast" not in plan
 

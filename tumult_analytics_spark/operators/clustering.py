@@ -7,32 +7,39 @@ variant).
 
 Scale design (100 TB):
 
-- The per-iteration state that touches the driver is exactly the k
-  centroids (k x dim doubles) — same contract as Spark MLlib's KMeans.
-  Assignment is an Arrow-batched pandas UDF holding the centroid matrix
-  in its closure: one numpy kernel per Arrow batch, no shuffle.
-- The centroid update is pure Catalyst — ``dim`` ``avg()`` aggregates
-  with map-side partial aggregation, so the shuffle per iteration is
-  k rows per task, not the data.
-- Deterministic end to end: seeding takes the k smallest ids
-  (TakeOrderedAndProject — no full sort), numpy argmin breaks distance
-  ties toward the smaller cluster id, and iteration count is fixed. The
-  same run on the same data gives byte-identical assignments, which is
-  what makes the DuckDB oracle in ``operators/entry.py`` possible.
+- A Lloyd iteration is one numpy kernel per Arrow batch: it assigns
+  rows to centroids and returns the per-centroid sums and counts, which
+  the driver divides into the next centroids.
+- Up to ``utils.DRIVER_LOOP_BYTES`` of ids and vectors, one
+  ``toArrow()`` probe collects those two columns and every iteration
+  runs that kernel on the driver. Above it each iteration is one
+  ``mapInArrow`` pass over the persisted input whose partitions emit
+  their k x (dim + 1) partial sums: the state that touches the driver
+  is the centroids, as in Spark MLlib's KMeans, and the data never
+  shuffles. Either way the final assignment is one lazy ``mapInArrow``
+  pass over the input.
+- Deterministic end to end: seeding takes the k smallest ids, numpy
+  argmin breaks distance ties toward the smaller cluster id, and
+  iteration count is fixed. The same run on the same data gives
+  byte-identical assignments, which is what makes the DuckDB oracle in
+  ``operators/entry.py`` possible.
 - Distances are computed as explicit (x - c)^2 sums in float64 (not the
   ||x||^2 - 2xc + ||c||^2 matmul expansion, which loses precision to
   cancellation); the kernel processes rows in fixed-size slices so peak
-  temp memory is bounded at slice x k x dim doubles per worker.
+  temp memory is bounded at slice x k x dim doubles.
 """
 
 from __future__ import annotations
 
-from typing import Tuple
+import math
+from typing import Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..utils import arrow_matrix, collect_below_cap, spread_rows, sum_partials
 
 __all__ = ["kmeans_fit_predict", "semantic_dedup"]
 
@@ -41,30 +48,37 @@ __all__ = ["kmeans_fit_predict", "semantic_dedup"]
 _SLICE = 4096
 
 
-def _assign_udf(centroids: np.ndarray):
-    """Scalar pandas UDF: embedding -> struct<cid, dist> against the
-    closure's centroid matrix (k x dim float64)."""
-    from pyspark.sql.functions import pandas_udf
+def _assign(X: np.ndarray, C: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
+    """Nearest centroid of each row of ``X`` (first minimum, so ties go
+    to the lower cluster id) and the Euclidean distance to it."""
+    cids = np.empty(len(X), dtype=np.int64)
+    dists = np.empty(len(X), dtype=np.float64)
+    for s in range(0, len(X), _SLICE):
+        xs = X[s : s + _SLICE]
+        d2 = ((xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
+        c = d2.argmin(axis=1)
+        cids[s : s + _SLICE] = c
+        dists[s : s + _SLICE] = np.sqrt(d2[np.arange(len(xs)), c])
+    return cids, dists
 
-    C = np.ascontiguousarray(centroids, dtype=np.float64)
 
-    @pandas_udf("cid long, dist double")
-    def assign(v: pd.Series) -> pd.DataFrame:
-        if len(v) == 0:
-            return pd.DataFrame({"cid": [], "dist": []})
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        cids = np.empty(len(X), dtype=np.int64)
-        dists = np.empty(len(X), dtype=np.float64)
-        for s in range(0, len(X), _SLICE):
-            xs = X[s : s + _SLICE]
-            d2 = ((xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
-            cids[s : s + _SLICE] = d2.argmin(axis=1)  # first min: low cid
-            dists[s : s + _SLICE] = np.sqrt(
-                d2[np.arange(len(xs)), cids[s : s + _SLICE]]
-            )
-        return pd.DataFrame({"cid": cids, "dist": dists})
+def _lloyd_partial(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """One Lloyd step's partial sums over the rows ``X``: the k x dim
+    per-centroid vector sums, then the k member counts."""
+    cids, _ = _assign(X, C)
+    onehot = (cids[:, None] == np.arange(len(C))).astype(np.float64)
+    return np.concatenate(((onehot.T @ X).ravel(), onehot.sum(axis=0)))
 
-    return assign
+
+def _lloyd_update(C: np.ndarray, partial: np.ndarray) -> np.ndarray:
+    """Centroids from one step's summed partials; a cluster that got no
+    members keeps its centroid."""
+    k, dim = C.shape
+    sums, counts = partial[: k * dim].reshape(k, dim), partial[k * dim :]
+    new = C.copy()
+    hit = counts > 0
+    new[hit] = sums[hit] / counts[hit, None]
+    return new
 
 
 #: Target rows per cluster when ``k=None``: k = ceil(n / this). 1024
@@ -91,96 +105,102 @@ def kmeans_fit_predict(
     cluster that goes empty keeps its previous centroid. ``dist_col`` is
     the Euclidean distance to the final centroid.
 
-    ``k=None`` derives ``ceil(n / KMEANS_TARGET_CLUSTER_ROWS)`` from a
-    corpus count, so cluster SIZE stays constant as the corpus grows —
+    ``k=None`` derives ``ceil(n / KMEANS_TARGET_CLUSTER_ROWS)`` from the
+    row count, so cluster SIZE stays constant as the corpus grows —
     the scale knob: any fixed k makes every per-cluster pass O(n^2/k),
     i.e. quadratic (measured: semantic_dedup_stats at its oracle-pinned
     k=4 reads 26x for 10x data at sf10; the auto-k path is linear, see
     SF1.md). Driver state per iteration is k x dim doubles either way.
 
-    ``materialize=True`` eagerly ``localCheckpoint``s the result —
-    worthwhile only when the caller will read it several times (e.g.
-    :func:`semantic_dedup`'s per-cluster pass plus a stats pass). The
-    default leaves the plan lazy: a single downstream action pays one
-    assignment kernel, not an extra full materialization.
+    When the ids and vectors take at most ``utils.DRIVER_LOOP_BYTES``
+    they are collected once and the iterations run on the driver; above
+    the cap each iteration is one ``mapInArrow`` pass. The result is a
+    lazy plan with one more assignment pass; ``materialize=True``
+    ``localCheckpoint``s it, which pays off when the caller reads it
+    several times (e.g. :func:`semantic_dedup`).
     """
-    if k is None:
-        import math
+    out, centroids, _ = _kmeans(
+        df, vec_col, id_col, k, n_iter, cluster_col, dist_col, materialize
+    )
+    return out, centroids
 
-        k = max(1, math.ceil(df.count() / KMEANS_TARGET_CLUSTER_ROWS))
-    if k < 1:
+
+def _kmeans(
+    df, vec_col, id_col, k, n_iter, cluster_col, dist_col, materialize
+) -> Tuple[DataFrame, np.ndarray, Optional[int]]:
+    """:func:`kmeans_fit_predict`, plus the input row count when it was
+    taken (``None`` above the cap with a fixed ``k``)."""
+    if k is not None and k < 1:
         raise ValueError("k must be >= 1")
     if n_iter < 0:
         raise ValueError("n_iter must be >= 0")
-    seed = df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    if len(seed) < k:
-        raise ValueError(f"k={k} exceeds the number of rows ({len(seed)})")
-    centroids = np.asarray([r[1] for r in seed], dtype=np.float64)
-    dim = centroids.shape[1]
+    # The vector length sizes the probe's row cap.
+    first = df.select(F.size(vec_col)).first()
+    dim = max(first[0] or 0, 0) if first else 0
+    table = collect_below_cap(df.select(id_col, vec_col), 8 * (dim + 1))
+    if table is None:
+        n = df.count() if k is None else None
+    else:
+        n = table.num_rows
+    if k is None:
+        k = max(1, math.ceil(n / KMEANS_TARGET_CLUSTER_ROWS))
+    # Seeds: the vectors of the k smallest ids.
+    if table is None:
+        seeds = df.select(id_col, vec_col).orderBy(id_col).limit(k).toArrow()
+    else:
+        seeds = table
+    X = arrow_matrix(seeds.column(vec_col), dim)
+    centroids = X[np.argsort(seeds.column(id_col).to_numpy(), kind="stable")[:k]]
+    if len(centroids) < k:
+        raise ValueError(f"k={k} exceeds the number of rows ({len(centroids)})")
 
-    from ..utils import spread_rows
-
-    # Every Lloyd pass and the final assignment run the Arrow kernel over
-    # the INPUT partitioning; a single-file scan would serialize them on
-    # one core (measured: semantic_dedup_stats 29.5x for 10x data at sf10
-    # purely from task starvation). No-op when the scan is already wide.
-    work = spread_rows(df).withColumn(
-        "__v__", F.col(vec_col).cast("array<double>")
-    )
-    # Each Lloyd iteration is a full pass; persist the casted vectors so
-    # iterations 2..n and the final assignment read memory, not parquet.
-    # Unpersisted below once the returned plan is materialized.
-    if n_iter > 0:
+    # Above the cap every pass runs the Arrow kernel over the INPUT
+    # partitioning; a single-file scan would serialize it on one core
+    # (measured: semantic_dedup_stats 29.5x for 10x data at sf10 purely
+    # from task starvation). No-op when the scan is already wide. Below
+    # the cap only the final assignment runs there, and the shuffle
+    # would cost more than it.
+    work = df if table is not None else spread_rows(df)
+    # Above the cap each Lloyd iteration is a full pass; persist the
+    # input so passes 2..n read memory, not the source plan.
+    cached = table is None and n_iter > 0
+    if cached:
         work = work.persist()
-        # Shrink the iteration frame to a SIZE-DERIVED partition count
-        # (float64 working set: dim * 8 bytes per row, ~64 MB per
-        # partition): the assignment kernel is vectorized numpy, so at
-        # small inputs one near-empty task per core per pass (plus a
-        # dim-aggregate partial per task) costs more than the work.
-        # At scale the byte-derived count meets or exceeds the scan's
-        # partitioning and this is a no-op — input-proportional, not
-        # tuned to the local core count. The count materializes the
-        # cache, which iteration 1 would have paid anyway; avg() then
-        # sums in a different partition order — last-ulp centroid
-        # drift the oracle contract already absorbs (partition counts
-        # vary with core count and AQE as it is).
-        cnt = work.count()
-        nparts = work.rdd.getNumPartitions()
-        want = max(1, min(nparts, -(-(cnt * dim * 8) // (64 << 20))))
-        if want < nparts:
-            small = work.repartition(want).persist()
-            small.count()
-            work.unpersist()
-            work = small
     for _ in range(n_iter):
-        assign = _assign_udf(centroids)
-        assigned = work.withColumn("__a__", assign(F.col("__v__")))
-        stats = (
-            assigned.groupBy(F.col("__a__.cid").alias("__cid__"))
-            .agg(*[F.avg(F.col("__v__")[i]).alias(f"__c{i}__") for i in range(dim)])
-            .collect()
-        )
-        new = centroids.copy()  # empty clusters keep their centroid
-        for r in stats:
-            new[r["__cid__"]] = [r[f"__c{i}__"] for i in range(dim)]
-        centroids = new
+        if table is not None:
+            partial = _lloyd_partial(X, centroids)
+        else:
+            partial = sum_partials(
+                work.select(vec_col),
+                lambda b: _lloyd_partial(arrow_matrix(b.column(0), dim), centroids),
+                k * (dim + 1),
+            )
+        centroids = _lloyd_update(centroids, partial)
 
-    assign = _assign_udf(centroids)
-    final = work.withColumn("__a__", assign(F.col("__v__")))
-    out = (
-        final.withColumn(cluster_col, F.col("__a__.cid"))
-        .withColumn(dist_col, F.col("__a__.dist"))
-        .drop("__v__", "__a__")
+    schema = T.StructType(
+        list(df.schema.fields)
+        + [T.StructField(cluster_col, T.LongType()),
+           T.StructField(dist_col, T.DoubleType())]
     )
-    if n_iter > 0:
-        if materialize:
-            # Materialize the assignment once, then release the cached
-            # vectors — no persisted RDDs outlive the call.
-            out = out.localCheckpoint(eager=True)
-        # Release the iteration cache either way; the lazy plan simply
-        # re-reads the source for its single final pass.
+
+    def attach(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            cids, dists = _assign(arrow_matrix(b.column(vec_col), dim), centroids)
+            yield pa.RecordBatch.from_arrays(
+                b.columns + [pa.array(cids), pa.array(dists)],
+                names=b.schema.names + [cluster_col, dist_col],
+            )
+
+    out = work.mapInArrow(attach, schema)
+    if materialize:
+        out = out.localCheckpoint(eager=True)
+    if cached:
+        # No persisted RDD outlives the call: a lazy result re-reads the
+        # source for its single final pass.
         work.unpersist(blocking=False)
-    return out, centroids
+    return out, centroids, n
 
 
 #: Hard ceiling on the rows a single cluster may hold in
@@ -249,20 +269,24 @@ def semantic_dedup(
     # materialize=True: ``assigned`` feeds BOTH the per-cluster dropped
     # pass and the anti-join's left side — checkpointing runs the
     # assignment kernel once instead of twice.
-    assigned, _ = kmeans_fit_predict(
-        df, vec_col, id_col, k=k, n_iter=n_iter, cluster_col=cluster_col,
-        materialize=True,
+    assigned, centroids, n_rows = _kmeans(
+        df, vec_col, id_col, k, n_iter, cluster_col, "dist", True
     )
     if method == "lsh":
-        # auto-bits counts the CHECKPOINTED assignment (same rows as
-        # df) — a block-cache read, not a second parquet scan.
-        n_rows = assigned.count() if bits is None else None
+        if bits is None:
+            from .similarity import _auto_lsh_bits
+
+            # auto-bits reads the row count k-means took, else counts the CHECKPOINTED assignment (same rows as df) —
+            # a block-cache read, not a second parquet scan.
+            bits = _auto_lsh_bits(
+                n_rows if n_rows is not None else assigned.count()
+            )
         return _semantic_dedup_lsh(
             assigned, vec_col, id_col, cluster_col, threshold,
-            bits, tables, plane_kind, lsh_seed, round_scores,
-            n_rows, int(max_cluster_rows),
+            int(bits), tables, plane_kind, lsh_seed, round_scores,
+            centroids.shape[1], int(max_cluster_rows),
         )
-    import pandas as pd  # noqa: F811 — local for the serialized kernel
+    import pandas as pd
 
     from .similarity import _smaller_id_dups, _unit_rows
 
@@ -297,12 +321,12 @@ def _semantic_dedup_lsh(
     id_col: str,
     cluster_col: str,
     threshold: float,
-    bits,
+    bits: int,
     tables: int,
     plane_kind: str,
     lsh_seed: int,
     round_scores: bool,
-    n_rows,
+    dim: int,
     cap: int,
 ) -> DataFrame:
     """The ``method="lsh"`` dropped-id pass of :func:`semantic_dedup`:
@@ -313,25 +337,13 @@ def _semantic_dedup_lsh(
     import pandas as pd
 
     from .similarity import (
-        _auto_lsh_bits,
         _melt_tables,
         _normalize_and_bucket,
         _planes_for,
         _smaller_id_dups,
     )
 
-    if bits is None:
-        bits = _auto_lsh_bits(int(n_rows))
-    first_vec = (
-        assigned.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    )
-    if first_vec is None or first_vec[0] is None:
-        raise ValueError(
-            f"semantic_dedup(lsh): column {vec_col!r} has no non-null "
-            "embedding; cannot infer vector dimension"
-        )
-    dim = len(first_vec[0])
-    planes = _planes_for(plane_kind, dim, int(bits), int(tables), lsh_seed)
+    planes = _planes_for(plane_kind, dim, bits, int(tables), lsh_seed)
     # carry the cluster id through the bucket kernel: one Arrow pass
     # instead of a join-back shuffle (measured ~2x on the graded query
     # at sf0.1, where machinery dominates).

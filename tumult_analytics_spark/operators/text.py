@@ -9,7 +9,7 @@ from typing import Dict, List, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..utils import local_frame
+from ..utils import arrow_matrix, collect_below_cap, local_frame, sum_partials
 
 #: Tiny per-language stopword lists for the n-gram-free language heuristic.
 STOPWORDS: Dict[str, List[str]] = {
@@ -180,6 +180,48 @@ def bigram_logprob_score(
 _BPE_SEP = "\x1f"
 
 
+def _bpe_pair_counts(words, counts, acc: dict) -> dict:
+    """Add to ``acc`` the adjacent-symbol pair counts of the ``_BPE_SEP``
+    -joined ``words``, each weighted by its corpus count."""
+    for w, n in zip(words, counts):
+        syms = [t for t in w.split(_BPE_SEP) if t]
+        for pair in zip(syms, syms[1:]):
+            acc[pair] = acc.get(pair, 0) + n
+    return acc
+
+
+def _bpe_top_pair(words: DataFrame):
+    """The most frequent adjacent pair of ``words`` as ``((left, right),
+    count)``, ties to the smaller ``(left, right)``, or ``None`` when no
+    word has two symbols: one ``mapInArrow`` pass in which each partition
+    emits its :func:`_bpe_pair_counts`, summed per pair in Spark, so one
+    row reaches the driver."""
+    import pyarrow as pa
+
+    schema = pa.schema([("l", pa.string()), ("r", pa.string()), ("cnt", pa.int64())])
+
+    def run(batches):
+        acc = {}
+        for b in batches:
+            _bpe_pair_counts(
+                b.column("__w__").to_pylist(), b.column("__n__").to_pylist(), acc
+            )
+        yield pa.RecordBatch.from_pylist(
+            [{"l": l, "r": r, "cnt": n} for (l, r), n in acc.items()], schema
+        )
+
+    top = (
+        words.select("__w__", "__n__")
+        .mapInArrow(run, "l string, r string, cnt long")
+        .groupBy("l", "r")
+        .agg(F.sum("cnt").alias("cnt"))
+        .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
+        .limit(1)
+        .collect()
+    )
+    return ((top[0]["l"], top[0]["r"]), top[0]["cnt"]) if top else None
+
+
 def bpe_learn_merges(
     df: DataFrame,
     text_column: str,
@@ -195,32 +237,28 @@ def bpe_learn_merges(
     iterates over the corpus: ONE pass builds the word-frequency
     histogram (explode tokens -> groupBy word), and every merge
     iteration runs on that histogram only (thousands-to-millions of
-    rows, not TBs). Per step: explode adjacent symbol pairs (weighted
-    by word count, pure Catalyst), aggregate, take the argmax
-    (count DESC, then left/right lexicographic — a 1-row driver
-    action), and apply the merge to the symbol arrays with an
-    Arrow-batched kernel (greedy left-to-right non-overlapping, the
-    standard BPE application order). ``localCheckpoint`` per iteration
-    keeps the plan O(1) in the step count.
+    rows, not TBs). Per step: weighted adjacent-pair counts over the
+    histogram (:func:`_bpe_pair_counts`), the argmax (count DESC, then
+    left/right lexicographic), and the merge applied to every word.
 
     Symbols are characters (no end-of-word marker — document-level
     token streams, not word-piece suffix modeling); deterministic
     given the corpus, so an unrolled SQL oracle replays every step.
+    Each word is a U+001F-joined, sentinel-wrapped symbol STRING
+    (``\\x1f s1 \\x1f s2 ... \\x1f``, split into code points by Spark)
+    and a merge is one literal ``replace(w, sep+l+sep+r+sep,
+    sep+l+r+sep)`` — leftmost non-overlapping continue-after-replacement,
+    exactly the greedy BPE application, and exactly the oracle's ``w{i}``
+    CTE.
 
-    Per-step execution mirrors the ORACLE's representation directly:
-    each word is a U+001F-joined, sentinel-wrapped symbol STRING
-    (``\\x1f s1 \\x1f s2 ... \\x1f``) and a merge is one literal
-    ``replace(w, sep+l+sep+r+sep, sep+l+r+sep)`` — leftmost
-    non-overlapping continue-after-replacement, exactly the greedy
-    BPE application, and exactly the oracle's ``w{i}`` CTE. That
-    removes the old per-step Arrow merge kernel (a Python boundary
-    round trip per step) and the per-step eager localCheckpoint (the
-    replace chain is a tiny expression stack on the one checkpointed
-    histogram, so the plan stays O(steps) without re-materializing).
-    The histogram is also shrunk to a size-derived partition count —
-    unique words are thousands-to-millions of rows at any corpus
-    scale, so per-step jobs shouldn't pay one task per core of the
-    scan parallelism (measured 2 tasks vs 32 at sf0.1).
+    The decision runs on the small table: up to ``utils.DRIVER_LOOP_BYTES``
+    of histogram, one ``toArrow()`` probe collects it
+    and the merges run on the driver as ``str.replace``; the words come
+    back as a local relation. Above the cap the histogram is
+    checkpointed once and each step is one ``mapInArrow`` pair-count
+    pass over it (the merges so far applied as a Catalyst ``replace``
+    chain) whose per-partition counts Spark sums per pair, so one row
+    reaches the driver.
 
     ``return_words``: additionally return the FULLY MERGED word
     histogram as ``(merges_df, words_df)`` where ``words_df`` has
@@ -233,7 +271,7 @@ def bpe_learn_merges(
     """
     if num_merges < 1:
         raise ValueError("num_merges must be >= 1")
-    sep = "\x1f"
+    sep = _BPE_SEP
     text = F.col(text_column)
     if lowercase:
         text = F.lower(text)
@@ -249,73 +287,46 @@ def bpe_learn_merges(
         ).alias("__w__"),
         F.col("__n__"),
         *orig_cols,
-    ).persist()
-    cnt = words.count()
-    nparts = words.rdd.getNumPartitions()
-    want = max(1, min(nparts, -(-cnt // _STEP_PARTITION_ROWS)))
-    shrunk = words.repartition(want) if want < nparts else words
-    ckpt = shrunk.localCheckpoint(eager=True)
-    words.unpersist()
-    words = ckpt
+    )
+    table = collect_below_cap(words, 64)
+    if table is not None:
+        ws = table.column("__w__").to_pylist()
+        ns = table.column("__n__").to_pylist()
+    else:
+        words = words.localCheckpoint(eager=True)
 
-    spark = df.sparkSession
-    syms = F.filter(
-        F.split("__w__", sep), lambda s: s != F.lit("")
-    ).alias("__syms__")
     merges = []
     for step in range(1, num_merges + 1):
-        pairs = (
-            words.select("__n__", syms)
-            # size >= 2: a single-symbol word has no pairs, and
-            # Spark's sequence(0, -1) would DESCEND ([0, -1])
-            # instead of being empty.
-            .filter(F.size("__syms__") >= 2)
-            .select(
-                F.col("__n__"),
-                F.explode(
-                    F.transform(
-                        F.sequence(
-                            F.lit(0), F.size("__syms__") - F.lit(2)
-                        ),
-                        lambda i: F.struct(
-                            F.element_at(
-                                "__syms__", (i + 1).cast("int")
-                            ).alias("l"),
-                            F.element_at(
-                                "__syms__", (i + 2).cast("int")
-                            ).alias("r"),
-                        ),
-                    )
-                ).alias("__p__"),
-            )
-            .groupBy(
-                F.col("__p__.l").alias("l"), F.col("__p__.r").alias("r")
-            )
-            .agg(F.sum("__n__").alias("cnt"))
-        )
-        top = pairs.orderBy(
-            F.desc("cnt"), F.asc("l"), F.asc("r")
-        ).limit(1).collect()
-        if not top:
+        if table is not None:
+            counts = _bpe_pair_counts(ws, ns, {})
+            top = min(counts.items(), key=lambda kv: (-kv[1], kv[0]), default=None)
+        else:
+            top = _bpe_top_pair(words)
+        if top is None:
             break
-        a, b, n_pair = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
-        merges.append((step, a, b, a + b, n_pair))
-        words = words.withColumn(
-            "__w__",
-            F.replace(
-                F.col("__w__"),
-                F.lit(sep + a + sep + b + sep),
-                F.lit(sep + a + b + sep),
-            ),
-        )
+        (a, b), n_pair = top
+        merges.append((step, a, b, a + b, int(n_pair)))
+        old, new = sep + a + sep + b + sep, sep + a + b + sep
+        if table is not None:
+            ws = [w.replace(old, new) for w in ws]
+        else:
+            words = words.withColumn(
+                "__w__", F.replace(F.col("__w__"), F.lit(old), F.lit(new))
+            )
 
+    spark = df.sparkSession
     merges_df = local_frame(
         spark, merges,
         "step int, left string, right string, merged string, pair_count long",
     )
-    if return_words:
-        return merges_df, words
-    return merges_df
+    if not return_words:
+        return merges_df
+    if table is not None:
+        import pyarrow as pa
+
+        table = table.set_column(0, "__w__", pa.array(ws, pa.string()))
+        words = local_frame(spark, table, words.schema)
+    return merges_df, words
 
 
 def bpe_apply(
@@ -672,116 +683,98 @@ def _char_ngram_features(
     return [F.col(vec_column)[j].cast("double") / nt for j in range(dim)]
 
 
-#: Rows per partition for iterative-GD training frames: ~300 B/row at
-#: dim=32 puts this near 40 MB partitions — small enough to keep cores
-#: busy at scale, large enough that a step's per-task overhead never
-#: dominates.
-_STEP_PARTITION_ROWS = 131072
+def _gd_partial(X, Y, b, W):
+    """One :func:`_train_gd` step's partial sums over the rows ``X``
+    (n x dim features) with targets ``Y`` (n x K): the row count, then
+    per target the squared-error sum, the bias-gradient sum and the
+    ``g^T X`` weight-gradient sums."""
+    import numpy as np
 
-
-def _shrink_training_frame(data: DataFrame, want: int) -> DataFrame:
-    """Repartition a counted GD training frame to the SIZE-DERIVED
-    partition count ``want`` (never more than it has), persist the
-    shrunk copy and unpersist the input (a no-op when it was never
-    persisted). Iterative trainers scan this frame once per step, so a
-    few thousand rows over one partition per core pay `steps * cores`
-    empty-task launches for nothing — measured 0.62 -> 0.46 s/step at
-    dim=32/K=4 on 5000 rows. Callers derive ``want`` from the input
-    (rows or bytes over a per-partition target), so at scale this is a
-    no-op: the knob stays scale-adaptive, not tuned to the local core
-    count. Sums then reduce in a different partition order — last-ulp
-    drift the trainers' round-6 contract already absorbs."""
-    nparts = data.rdd.getNumPartitions()
-    want = max(1, min(nparts, want))
-    if want >= nparts:
-        return data
-    small = data.repartition(want).persist()
-    small.count()
-    data.unpersist()
-    return small
-
-
-def _gd_step(data: DataFrame, b: list, w: list) -> DataFrame:
-    """One :func:`_train_gd` step as a one-row frame whose ``__r__``
-    struct holds, per target ``c``, ``mse{c}``, ``gb{c}`` and
-    ``g{c}_{j}``: every target's gradient averages in ONE
-    map-side-combined aggregation. Cost disciplines (dim=32/K=4, sf0.1:
-    86 s -> ~0.5 s per 3 steps; per-row arithmetic and the aggregation
-    tree unchanged): z, then e/g, are staged as projected columns so
-    the K*(dim+2) aggregates are attribute products (inlining them
-    grows the compiled expression text ~70x); and the step is built as
-    SQL strings, not thousands of py4j Column calls. Weights embed as
-    `<repr>D` double literals — repr round-trips doubles exactly — so
-    re-codegen per step (~0.1 s) replaces a broadcast-weights join
-    (>0.4 s of exchange setup per step)."""
-    dim = len(w[0])
-    xs = [f"__x{j}__" for j in range(dim)]
-    z_sel = xs + [f"__y{c}__" for c in range(len(b))]
-    eg_sel = list(xs)
-    aggs = []
-    for c in range(len(b)):
-        terms = " ".join(f"+ {w[c][j]!r}D * __x{j}__" for j in range(dim))
-        z_sel.append(f"({b[c]!r}D {terms}) AS __z{c}__")
-        zc = f"__z{c}__"
-        e = f"(0.5D * (1.0D + {zc} / (1.0D + abs({zc}))) - __y{c}__)"
-        sp = f"(0.5D / ((1.0D + abs({zc})) * (1.0D + abs({zc}))))"
-        eg_sel.append(f"{e} AS __e{c}__")
-        eg_sel.append(f"(2.0D * {e} * {sp}) AS __g{c}__")
-        aggs.append(f"avg(__e{c}__ * __e{c}__) AS mse{c}")
-        aggs.append(f"avg(__g{c}__) AS gb{c}")
-        aggs.extend(f"avg(__g{c}__ * __x{j}__) AS g{c}_{j}" for j in range(dim))
-    return (
-        data.selectExpr(*z_sel)
-        .selectExpr(*eg_sel)
-        .agg(F.expr("struct(" + ", ".join(aggs) + ")").alias("__r__"))
+    z = X @ W.T + b
+    e = 0.5 * (1.0 + z / (1.0 + np.abs(z))) - Y
+    g = 2.0 * e * (0.5 / np.square(1.0 + np.abs(z)))
+    return np.concatenate(
+        ([float(len(X))], (e * e).sum(axis=0), g.sum(axis=0), (g.T @ X).ravel())
     )
 
 
-def _train_gd(data, b, w, steps, lr, name) -> "list[tuple]":
-    """The one SQL-string GD trainer behind :func:`quality_train_logreg`
-    and :func:`language_train_logreg`: full-batch gradient descent of
-    one rational-logistic model per target over a frame projected to
-    ``__y{c}__`` targets and ``__x{j}__`` features, from biases ``b``
-    and weight rows ``w``.
+def _column_features(K: int):
+    """GD featurizer for a frame of ``K`` target columns followed by the
+    feature columns: an Arrow batch -> ``(X, Y)``. A row with a null
+    target or feature is skipped, as SQL ``avg()`` skips it."""
+    import numpy as np
 
-    Distributed-GD shape (MLlib's gradient aggregation): weights live
-    on the driver; the frame is persisted, counted and shrunk once;
-    each step is ONE map-side-combined aggregation (:func:`_gd_step`),
-    a scan plus a K*(dim+2)-double exchange, then a driver-side update.
+    def featurize(batch):
+        cols = batch.drop_null().columns
+        M = np.column_stack([c.to_numpy(zero_copy_only=False) for c in cols])
+        return M[:, K:], M[:, :K]
+
+    return featurize
+
+
+def _train_gd(data, featurize, b, w, steps, lr, name, persist=True) -> "list[tuple]":
+    """The one GD trainer, behind :func:`quality_train_logreg`,
+    :func:`language_train_logreg` and :func:`language_train_logreg_vec`:
+    full-batch gradient descent of one rational-logistic model per
+    target, from biases ``b`` (K) and weight rows ``w`` (K x dim), over
+    ``data`` as ``featurize`` (an Arrow batch -> features ``X``, targets
+    ``Y``) reads it.
+
+    Each step is one :func:`_gd_partial` kernel: ``1 + 2K + K*dim``
+    partial sums, then a driver-side update. Up to
+    ``utils.DRIVER_LOOP_BYTES`` of input (8 bytes per feature and
+    target) one ``toArrow()`` probe collects the frame and every step
+    runs on the driver; above it each step is one ``mapInArrow`` pass
+    over ``data`` (persisted first when ``persist``) whose partitions
+    emit their partial sums — the weights ship in the task closure, so
+    there is no broadcast join and no row shuffle.
 
     Engine-portability: ``s(z) = 0.5 * (1 + z / (1 + |z|))`` with MSE
     loss, gradient ``2 * (s - y) * s'(z) * x``, ``s'(z) = 0.5 /
     (1 + |z|)^2`` — pure +,*,/,abs arithmetic, no libm exp/log, so an
     ANSI-SQL oracle replays the unrolled steps to equality after
-    round-to-6 (``avg()`` sums in partition order, so not bit-exact).
+    round-to-6 (sums run in another order, so not bit-exact).
 
     Returns ``(step, target, bias, weights, mse)`` rows: POST-update
     weights, mse measured BEFORE the update.
     """
+    import numpy as np
+
     if steps < 1:
         raise ValueError("steps must be >= 1")
-    data = data.persist()
+    b = np.array(b, dtype=np.float64)
+    W = np.array(w, dtype=np.float64)
+    K, dim = W.shape
+    table = collect_below_cap(data, 8 * (K + dim))
+    if table is not None:
+        X, Y = featurize(table)
+    elif persist:
+        data = data.persist()
+    hist = []
     try:
-        cnt = data.count()
-        if cnt == 0:
-            raise ValueError(
-                f"{name}: empty training input — the gradient averages "
-                "would be null"
-            )
-        data = _shrink_training_frame(data, -(-cnt // _STEP_PARTITION_ROWS))
-        b, w = list(b), [list(row) for row in w]
-        hist = []
         for step in range(1, int(steps) + 1):
-            agg = _gd_step(data, b, w).collect()[0]["__r__"]
-            for c in range(len(b)):
-                b[c] -= float(lr) * agg[f"gb{c}"]
-                for j in range(len(w[c])):
-                    w[c][j] -= float(lr) * agg[f"g{c}_{j}"]
-                hist.append(
-                    (step, c, b[c], list(w[c]), float(agg[f"mse{c}"]))
+            if table is not None:
+                p = _gd_partial(X, Y, b, W)
+            else:
+                p = sum_partials(
+                    data,
+                    lambda batch: _gd_partial(*featurize(batch), b, W),
+                    1 + 2 * K + K * dim,
                 )
+            n = p[0]
+            if n == 0:
+                raise ValueError(
+                    f"{name}: empty training input — the gradient "
+                    "averages would be null"
+                )
+            mse = p[1 : 1 + K] / n
+            b = b - float(lr) * p[1 + K : 1 + 2 * K] / n
+            W = W - float(lr) * p[1 + 2 * K :].reshape(K, dim) / n
+            for c in range(K):
+                hist.append((step, c, float(b[c]), W[c].tolist(), float(mse[c])))
     finally:
-        data.unpersist()
+        if table is None and persist:
+            data.unpersist()
     return hist
 
 
@@ -804,12 +797,12 @@ def language_train_logreg(
     cannot separate same-script languages.
 
     Trained by the shared GD trainer :func:`_train_gd` (its docstring
-    carries the full rationale) with K indicator targets: weights
-    driver-side (K x (dim+1) floats), each step ONE map-side-combined
-    aggregation computing every class's gradient averages in a single
-    pass. Features are exact rationals: signed gram count / gram count
-    (both integers); ``vec_column`` reuses an already-computed
-    :func:`hashed_char_ngrams` column.
+    carries the full rationale) with K indicator targets over ``dim``
+    projected feature columns: weights driver-side (K x (dim+1)
+    floats), each step one kernel computing every class's gradient sums
+    in a single pass. Features are exact rationals: signed gram count /
+    gram count (both integers); ``vec_column`` reuses an
+    already-computed :func:`hashed_char_ngrams` column.
 
     Returns one row per (step, class): POST-update ``bias, w0..w{dim-1}``
     and that class's pre-update ``mse``.
@@ -825,8 +818,8 @@ def language_train_logreg(
     xs = [x.alias(f"__x{j}__") for j, x in enumerate(xs)]
     K = len(classes)
     hist = _train_gd(
-        with_vec.select(*ys, *xs), [0.0] * K, [[0.0] * dim] * K,
-        steps, lr, "language_train_logreg",
+        with_vec.select(*ys, *xs), _column_features(K),
+        [0.0] * K, [[0.0] * dim] * K, steps, lr, "language_train_logreg",
     )
     schema = (
         "step int, class string, bias double, "
@@ -876,8 +869,7 @@ def language_id_trained(
     # Materialize each class score as a PROJECTED COLUMN before the
     # argmax fold: the fold's when-chains duplicate their inputs, so
     # folding over the raw (dim+1)-term score expressions multiplies
-    # compiled expression text ~2^K (the `_gd_step` staging lesson);
-    # over attributes it stays linear.
+    # compiled expression text ~2^K; over attributes it stays linear.
     zcols = []
     for i, c in enumerate(classes):
         bias, ws = weights[c]
@@ -908,6 +900,22 @@ def language_id_trained(
     return scored.withColumn(output_column, best_c).drop(*drops)
 
 
+def _vec_features(K: int, dim: int):
+    """GD featurizer for :func:`language_train_logreg_vec`'s frame of
+    ``__yi__`` class indexes (-1: no class), ``__cv__`` signed gram
+    counts and ``__nt__`` gram counts: an Arrow batch -> ``(X, Y)``
+    with ``X = cv / nt`` and one-hot targets ``Y``."""
+    import numpy as np
+
+    def featurize(batch):
+        X = arrow_matrix(batch.column("__cv__"), dim)
+        X /= batch.column("__nt__").to_numpy()[:, None]
+        lab = batch.column("__yi__").to_numpy()
+        return X, (lab[:, None] == np.arange(K)).astype(np.float64)
+
+    return featurize
+
+
 def language_train_logreg_vec(
     df: DataFrame,
     text_column: "Optional[str]",
@@ -924,32 +932,18 @@ def language_train_logreg_vec(
     """PRODUCTION-SHAPE trained language id: the exact
     :func:`language_train_logreg` math (hashed char-``n``-gram
     features, K one-vs-rest rational-logistic models, full-batch GD,
-    MSE loss) executed as vectorized numpy kernels so ``dim`` can be
-    the 2^10..2^21 a deployed fastText-style model uses. The shared
-    SQL-string trainer (:func:`_train_gd`) is the right shape at
-    oracle-friendly dims (every step replayable in SQL) but generates
-    K*(dim+2) aggregate expressions — compile-bound far below
-    dim=1024.
-
-    Distributed-GD shape per step (the 100 TB contract): one
-    ``mapInPandas`` pass emits ONE bounded partial-gradient row per
-    Arrow batch (``1 + 2K + K*dim`` doubles: count, per-class
-    squared-error sums, bias-gradient sums, ``g^T X``), reduced with
-    a posexplode + per-slot sum — a K*dim-row exchange, independent
-    of corpus size — and the weight update is a K x dim driver-side
-    vector op. The corpus is scanned ``steps`` times off one persist;
-    nothing else leaves the executors.
+    MSE loss) at the 2^10..2^21 ``dim`` a deployed fastText-style model
+    uses. It featurizes an Arrow batch straight from the hashed vector
+    column (``X = cv / n_grams``, one-hot targets) for the shared
+    trainer :func:`_train_gd`, where :func:`language_train_logreg`
+    projects ``dim`` Catalyst feature columns first — compile-bound far
+    below dim=1024. Rows with a null vector are skipped.
 
     Returns one row per (step, class): post-update ``bias``,
     ``w array<double>``, and that class's pre-update ``mse`` — the
     :func:`language_train_logreg` record, with the weight vector as
     an array instead of dim columns.
     """
-    import numpy as np
-    import pandas as pd
-
-    if steps < 1:
-        raise ValueError("steps must be >= 1")
     if not classes:
         raise ValueError("classes must be non-empty")
     # nt_column: reuse a precomputed gram count so callers can PRUNE
@@ -957,7 +951,8 @@ def language_train_logreg_vec(
     # vectors dominate memory and a dangling multi-KB text column per
     # row is pure waste (the sf100 OOM lesson). persist=False for the
     # same reason: when the caller already cached the pruned input,
-    # a second cache of the same vectors here would double memory.
+    # a second cache of the same vectors above the driver cap would
+    # double memory.
     with_vec, vec_column, nt = _char_vec(
         df, text_column, dim, n, vec_column, nt_column
     )
@@ -970,81 +965,13 @@ def language_train_logreg_vec(
         F.col(vec_column).alias("__cv__"),
         nt.alias("__nt__"),
     )
-    if persist:
-        data = data.persist()
-    try:
-        cnt = data.count()
-        if cnt == 0:
-            raise ValueError("language_train_logreg_vec: empty input")
-        # Partition count derived from the float64 working set (dim * 8
-        # bytes per row, ~64 MB per partition) instead of a row count:
-        # each of the ``steps`` passes otherwise pays one near-empty
-        # task per input partition plus a partial-gradient row
-        # (1 + 2K + K*dim doubles) per Arrow batch into the posexplode
-        # reduce.
-        data = _shrink_training_frame(
-            data, -(-(cnt * dim * 8) // (64 << 20))
-        )
-        b = np.zeros(K)
-        W = np.zeros((K, dim))
-        L = 1 + 2 * K + K * dim
-        rows = []
-        for step in range(1, int(steps) + 1):
-            Wc, bc = W.copy(), b.copy()
-
-            def _grad(batches, Wc=Wc, bc=bc):
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    X = np.stack(pdf["__cv__"].to_numpy()).astype(
-                        np.float64
-                    )
-                    X /= pdf["__nt__"].to_numpy()[:, None]
-                    lab = pdf["__yi__"].to_numpy()
-                    Y = np.zeros((len(lab), K))
-                    m = lab >= 0
-                    Y[np.nonzero(m)[0], lab[m]] = 1.0
-                    z = X @ Wc.T + bc
-                    s = 0.5 * (1.0 + z / (1.0 + np.abs(z)))
-                    e = s - Y
-                    sp = 0.5 / np.square(1.0 + np.abs(z))
-                    g = 2.0 * e * sp
-                    partial = np.concatenate(
-                        (
-                            [float(len(lab))],
-                            (e * e).sum(axis=0),
-                            g.sum(axis=0),
-                            (g.T @ X).ravel(),
-                        )
-                    )
-                    yield pd.DataFrame({"p": [partial.tolist()]})
-
-            sums = (
-                data.mapInPandas(_grad, "p array<double>")
-                .select(F.posexplode("p"))
-                .groupBy("pos")
-                .agg(F.sum("col").alias("s"))
-                .collect()
-            )
-            vec = np.zeros(L)
-            for r in sums:
-                vec[r["pos"]] = r["s"]
-            cnt = vec[0]
-            mse = vec[1 : 1 + K] / cnt
-            gb = vec[1 + K : 1 + 2 * K] / cnt
-            gw = vec[1 + 2 * K :].reshape(K, dim) / cnt
-            b = b - float(lr) * gb
-            W = W - float(lr) * gw
-            for ci, c in enumerate(classes):
-                rows.append(
-                    (step, c, float(b[ci]), W[ci].tolist(),
-                     float(mse[ci]))
-                )
-    finally:
-        data.unpersist()
+    hist = _train_gd(
+        data, _vec_features(K, dim), [0.0] * K, [[0.0] * dim] * K,
+        steps, lr, "language_train_logreg_vec", persist=persist,
+    )
     return local_frame(
         df.sparkSession,
-        rows,
+        [(step, classes[c], b, w, mse) for step, c, b, w, mse in hist],
         "step int, class string, bias double, w array<double>, "
         "mse double",
     )
@@ -1896,8 +1823,8 @@ def quality_train_logreg(
     Trained by the shared GD trainer :func:`_train_gd` (its docstring
     carries the distributed-GD and engine-portability rationale) with
     one numeric target starting from ``init``: weights live on the
-    driver (4 floats), each step is ONE map-side-combined aggregation
-    over the cached feature frame — a scan + 5-double exchange.
+    driver (4 floats), and each step is one kernel over the three
+    projected feature columns.
 
     Returns one row per step: ``step`` (1-based), the POST-update
     weights ``bias, w_tokens, w_mean_tok, w_punct``, and ``mse``
@@ -1909,8 +1836,8 @@ def quality_train_logreg(
         *[f.alias(f"__x{j}__") for j, f in enumerate(feats)],
     )
     hist = _train_gd(
-        data, [float(init[0])], [[float(v) for v in init[1:4]]],
-        steps, lr, "quality_train_logreg",
+        data, _column_features(1), [float(init[0])],
+        [[float(v) for v in init[1:4]]], steps, lr, "quality_train_logreg",
     )
     return local_frame(
         df.sparkSession,
